@@ -75,7 +75,6 @@ HEADLINERS = [
     "text_quality",
     "text_langid",
     "text_profile",
-    "curate_corpus",
     "ev_range_join",
     "q18_large_orders",
     "agg_rollup",
@@ -89,7 +88,6 @@ HEADLINERS = [
     "sample_stratified",
     "emb_quantize",
     "mm_dedup_media",
-    "curate_corpus_v2",
     # round-3 wave 2: remaining TPC-H shapes + decontamination + vocab
     "q9_product_profit",
     "q21_waiting_supplier",
@@ -119,16 +117,13 @@ HEADLINERS = [
     "corpus_shard_manifest",
     "corpus_chunk_windows",
     "text_quality_topfrac",
-    "curate_corpus_v3",
     # round-4b additions: hashed-bigram LM quality, keep-best-quality
     # component dedup, incremental band-index probe, SCD2 intervals
     "text_lm_score",
     "dedup_keep_best_quality",
     "dedup_incremental_index",
     "ev_scd2_intervals",
-    # late-r4b flagships: the full composed pipeline with the LM polish,
-    # and the day-2 incremental curation mode
-    "curate_corpus_v5",
+    # late-r4b: the day-2 incremental curation mode
     "curate_corpus_incremental",
     # round-4c additions: time-series densification + range windows,
     # data-quality audit, PMI collocations, per-dim standardization,
@@ -160,10 +155,9 @@ HEADLINERS = [
     "sketch_kmv_overlap",
     "text_rake_keyphrases",
     "corpus_mix_temperature",
-    # post-capstone r4d: incremental CC, the v6 flagship, CMS
-    # calibration, cluster quality, attribution
+    # post-capstone r4d: incremental CC, CMS calibration, cluster
+    # quality, attribution
     "dedup_components_incremental",
-    "curate_corpus_v6",
     "sketch_cms_error",
     "emb_cluster_quality",
     "ev_attribution_linear",
@@ -177,7 +171,6 @@ HEADLINERS = [
     "emb_power_iteration",
     "ev_sequence_pattern",
     "ev_session_incident_overlap",
-    "curate_corpus_v7",
     "corpus_dedup_funnel",
     "knn_ivf_nprobe2",
     "corpus_ccnet_buckets",
@@ -199,7 +192,8 @@ HEADLINERS = [
     # round-8 wave 4: DSIR domain-targeted selection (hashed log-ratio
     # importance + Gumbel-top-k resample)
     "corpus_dsir_select",
-    # round-8 wave 5: the flagship with the DSIR domain-affinity gate
+    # round-8 wave 5: the curation flagship (DSIR domain-affinity gate
+    # added)
     "curate_corpus_v8",
     # round-10: the streamed dedup-graph maintenance sink (fenced
     # delta labels + pruned probes + mid-run compaction over three
@@ -251,10 +245,7 @@ HEADLINERS = [
 # bar-carrying queries (VERDICT r5 next #3 — in the r5 driver record the
 # LSH family's passes absorbed the curate trio's leakage).
 HEAVY_LAST = [
-    "curate_corpus_v5",
     "curate_corpus_incremental",
-    "curate_corpus_v6",
-    "curate_corpus_v7",
     "curate_corpus_v8",
     "corpus_dedup_funnel",
     "dedup_graph_stream",
@@ -275,9 +266,6 @@ BAR_QUERIES = [
     "knn_cosine_topk",
     "knn_pq_adc",
     "corpus_bpe_train",
-    "curate_corpus",
-    "curate_corpus_v6",
-    "curate_corpus_v7",
     "dedup_components_incremental",
     "text_lm_score",
 ]

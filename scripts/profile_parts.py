@@ -43,7 +43,7 @@ def main() -> None:
         winnow_fingerprints,
         winnow_pairs,
     )
-    from wikidatabots_spark.plans.curation import _v3_gated
+    from wikidatabots_spark.plans.quality import _gate_stack
     from wikidatabots_spark.plans.llmdata import dsir_occurrences, dsir_scores
     from wikidatabots_spark.sources.tables import load_table
     from wikidatabots_spark.functions.scale import pushdown_fence
@@ -80,8 +80,13 @@ def main() -> None:
             ),
         ),
         "lm_score": lambda: with_lm_score(d()),
-        "v3_gated_standin": lambda: _v3_gated(spark, sf_dir),
-        "v3_gated_trained": lambda: _v3_gated(spark, sf_dir, classifier="trained"),
+        "gate_stack": lambda: _gate_stack(
+            spark,
+            sf_dir,
+            pushdown_fence(
+                dsir_occurrences(d().select("doc_id", "source", "text"))
+            ).select("doc_id", "bucket", "cnt"),
+        ),
     }
 
     # warmup

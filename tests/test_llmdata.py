@@ -286,34 +286,45 @@ def test_budget_select_fact_window_is_partitioned(spark, sf_dir):
 
 
 def test_curate_v5_lm_gate_strictly_prunes(spark, sf_dir):
-    """v5's LM polish must actually FIRE: its pre-mixture doc set is a
-    strict subset of v4's survivors (bottom quarter by LM score
-    dropped), non-empty, and the registered v5 output stays inside it."""
+    """The curation flagship's LM polish must actually FIRE: on the set
+    that reaches it (gate stack minus the SemDeDup and DSIR drops,
+    re-derived here from the stage operators) it drops a non-empty
+    strict subset (the bottom quarter by LM score), something
+    survives, and the registered curate_corpus_v8 output stays inside
+    the survivors."""
     from wikidatabots_spark import plans
     from wikidatabots_spark.operators.lm import with_lm_score
     from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _v3_gated
-    from wikidatabots_spark.plans.llmdata import _v5_lmdrop
+    from wikidatabots_spark.plans.llmdata import dsir_occurrences, dsir_scores
+    from wikidatabots_spark.plans.quality import _gate_stack, _lm_drop
     from wikidatabots_spark.sources.tables import load_table
 
+    d = load_table(spark, sf_dir, "documents")
+    text = d.select("doc_id", "source", "text")
+    sc = dsir_scores(text).collect()
+    s_imp = sum(r.imp_ppm for r in sc)
+    s_tok = sum(r.n_tok for r in sc)
+    below = [r.doc_id for r in sc if r.imp_ppm * s_tok < r.n_tok * s_imp]
     emb = load_table(spark, sf_dir, "embeddings")
     semdrop = semdedup_flags(emb, 4, 2, 0.3).where(
         ~F.col("is_kept")
     ).select(F.col("vec_id").alias("doc_id"))
-    gated4_df = _v3_gated(spark, sf_dir).join(semdrop, "doc_id", "left_anti")
-    gated4 = {r.doc_id for r in gated4_df.collect()}
-    d = load_table(spark, sf_dir, "documents")
-    lmdrop = {
-        r.doc_id for r in _v5_lmdrop(with_lm_score(d), gated4_df).collect()
-    }
-    assert lmdrop and lmdrop < gated4  # gate fires, inside the survivors
-    gated5 = gated4 - lmdrop
-    assert len(gated5) > 0
-    v5 = {
+    occ = dsir_occurrences(text).select("doc_id", "bucket", "cnt")
+    pre_lm_df = (
+        _gate_stack(spark, sf_dir, occ)
+        .join(semdrop, "doc_id", "left_anti")
+        .where(~F.col("doc_id").isin(below))
+    )
+    pre_lm = {r.doc_id for r in pre_lm_df.collect()}
+    lmdrop = {r.doc_id for r in _lm_drop(with_lm_score(d), pre_lm_df).collect()}
+    assert lmdrop and lmdrop < pre_lm  # gate fires, inside the survivors
+    survivors = pre_lm - lmdrop
+    assert len(survivors) > 0
+    v8 = {
         r.doc_id
-        for r in plans.REGISTRY["curate_corpus_v5"].fn(spark, sf_dir).collect()
+        for r in plans.REGISTRY["curate_corpus_v8"].fn(spark, sf_dir).collect()
     }
-    assert v5 <= gated5 and len(v5) > 0
+    assert v8 <= survivors and len(v8) > 0
 
 
 def test_round4b_ops_empty_input_safety(spark):
@@ -440,6 +451,7 @@ def test_corpus_dsir_select_importance_biased_and_topk_plan(spark, sf_dir):
     and the model side joins as a broadcast."""
     from wikidatabots_spark.plans import llmdata
     from wikidatabots_spark.plans.registry import REGISTRY
+    from wikidatabots_spark.sources.tables import load_table
 
     fn = REGISTRY["corpus_dsir_select"].fn
     df = fn(spark, sf_dir)
@@ -449,9 +461,11 @@ def test_corpus_dsir_select_importance_biased_and_topk_plan(spark, sf_dir):
     assert len(ids) == len(set(ids))
     assert all(r.source != llmdata._DSIR_TARGET for r in sel)
 
-    # pool = same plan with the limit lifted above the pool size
+    # pool = same plan with the limit lifted to the corpus size (the
+    # pool is a subset of the documents); a k like 10**9 makes every
+    # top-k task pre-allocate a k-slot heap and kills the JVM
     old_k = llmdata._DSIR_K
-    llmdata._DSIR_K = 10**9
+    llmdata._DSIR_K = load_table(spark, sf_dir, "documents").count()
     try:
         pool = fn(spark, sf_dir).collect()
     finally:

@@ -27,6 +27,7 @@ FAST = [
     "text_fingerprint",
     "tmdb_via_imdb",
     "opencritic_add",
+    "curate_corpus_v8",
 ]
 
 

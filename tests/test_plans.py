@@ -70,15 +70,12 @@ def test_registry_priority_window():
         "mm_media_meta", "mm_sample_frames", "mm_extract_features",
         "text_profile", "knn_cosine_topk",
         # promoted composed pipelines / extensions (VERDICT r2 next #2,
-        # r3 next #5); curate_corpus v1/v3 and corpus_mix_epochs rotate
-        # since r11 (v8's oracle strictly supersedes the v-chain)
+        # r3 next #5); corpus_mix_epochs rotates since r11
         "asof_purchase_signup", "sketch_count_min",
         "dedup_winnow",
         # seated r11: the composed streaming ingest path
         "ingest_pipeline_stream",
-        # v7 -> v8 seat upgrade r8: v8's oracle is v7's entire program
-        # plus the DSIR-gate splices (asserted single-site), so the
-        # driver verifies a strict superset; v7 stays locally gated
+        # the one curation pipeline and its LM-score stage
         "curate_corpus_v8", "text_lm_score",
         # r4c: A3/O1/O2 merged slot + the promoted tokenizer
         "op_order_collect", "corpus_tokenize_ids",
@@ -179,18 +176,24 @@ def test_headliners_execute(spark, sf_dir, name):
 
 
 def test_curate_v4_semantic_gate_strictly_prunes(spark, sf_dir):
-    """v4's cross-table semantic gate must actually FIRE on the test
-    corpus: its post-gate doc set (pre-mixture — mixture rates depend
-    on the gated counts, so FINAL outputs are deliberately not
-    comparable) is a strict subset of v3's — guards against the
-    anti-join silently becoming a no-op."""
+    """The curation flagship's cross-table semantic gate must actually
+    FIRE on the test corpus: SemDeDup drops a non-empty strict subset
+    of the gate stack's survivors, and the registered curate_corpus_v8
+    output stays inside what remains (pre-mixture sets — mixture rates
+    depend on the gated counts, so only containment is comparable) —
+    guards against the anti-join silently becoming a no-op."""
     from pyspark.sql import functions as F
 
     from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _v3_gated
+    from wikidatabots_spark.plans.llmdata import dsir_occurrences
+    from wikidatabots_spark.plans.quality import _gate_stack
     from wikidatabots_spark.sources.tables import load_table
 
-    gated3 = {r.doc_id for r in _v3_gated(spark, sf_dir).collect()}
+    d = load_table(spark, sf_dir, "documents")
+    occ = dsir_occurrences(d.select("doc_id", "source", "text")).select(
+        "doc_id", "bucket", "cnt"
+    )
+    gated = {r.doc_id for r in _gate_stack(spark, sf_dir, occ).collect()}
     semdrop = {
         r.vec_id
         for r in semdedup_flags(
@@ -199,15 +202,15 @@ def test_curate_v4_semantic_gate_strictly_prunes(spark, sf_dir):
         .where(~F.col("is_kept"))
         .collect()
     }
-    gated4 = gated3 - semdrop
-    assert gated4 < gated3  # the gate fires on this corpus
-    assert len(gated4) > 0
-    # and the registered v4 output contains exactly gated4's docs
-    v4 = {
+    kept = gated - semdrop
+    assert kept < gated  # the gate fires on this corpus
+    assert len(kept) > 0
+    # and the registered flagship output contains only kept docs
+    v8 = {
         r.doc_id
-        for r in plans.REGISTRY["curate_corpus_v4"].fn(spark, sf_dir).collect()
+        for r in plans.REGISTRY["curate_corpus_v8"].fn(spark, sf_dir).collect()
     }
-    assert v4 <= gated4
+    assert v8 and v8 <= kept
 
 
 def test_driver_window_is_pandas_canonicalizable(spark, sf_dir):

@@ -428,16 +428,22 @@ def test_quantile_hist_sketch_is_mergeable_and_bounded(spark, sf_dir):
 
 
 def test_curate_v8_dsir_gate_semantics(spark, sf_dir):
-    """The v8 domain gate's contract: every RAW-pool doc the v8
-    flagship keeps has per-token DSIR affinity at or above the raw
-    pool's overall per-token rate (imp*Σn ≥ n*Σimp, the integer
+    """The flagship's DSIR domain gate contract: every RAW-pool doc
+    curate_corpus_v8 keeps has per-token DSIR affinity at or above the
+    raw pool's overall per-token rate (imp*Σn ≥ n*Σimp, the integer
     cross-multiply), target-source docs are exempt, and the gate
-    genuinely fires — at least one below-rate doc that v7 kept is gone
-    from v8."""
+    genuinely fires — at least one below-rate doc that reaches it
+    (passes the gate stack and SemDeDup) is gone from v8."""
     from pyspark.sql import functions as F
 
     from wikidatabots_spark import plans
-    from wikidatabots_spark.plans.llmdata import _DSIR_TARGET, dsir_scores
+    from wikidatabots_spark.operators.similarity import semdedup_flags
+    from wikidatabots_spark.plans.llmdata import (
+        _DSIR_TARGET,
+        dsir_occurrences,
+        dsir_scores,
+    )
+    from wikidatabots_spark.plans.quality import _gate_stack
     from wikidatabots_spark.sources.tables import load_table
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -454,9 +460,15 @@ def test_curate_v8_dsir_gate_semantics(spark, sf_dir):
     v8_raw = {r.doc_id for r in v8 if r.source != _DSIR_TARGET}
     assert v8_raw.isdisjoint(below)
 
-    v7_docs = {
-        r.doc_id
-        for r in plans.REGISTRY["curate_corpus_v7"].fn(spark, sf_dir).collect()
+    occ = dsir_occurrences(d).select("doc_id", "bucket", "cnt")
+    gated = {r.doc_id for r in _gate_stack(spark, sf_dir, occ).collect()}
+    semdrop = {
+        r.vec_id
+        for r in semdedup_flags(
+            load_table(spark, sf_dir, "embeddings"), 4, 2, 0.3
+        )
+        .where(~F.col("is_kept"))
+        .collect()
     }
     v8_docs = {r.doc_id for r in v8}
-    assert (v7_docs & below) - v8_docs, "the DSIR gate never fired"
+    assert ((gated - semdrop) & below) - v8_docs, "the DSIR gate never fired"

@@ -1,211 +1,16 @@
-"""End-to-end corpus curation: the composed production pipeline a
-training-data run actually executes, as one oracle-checked query.
+"""Domain-mixture resampling with epochs (``corpus_mix_epochs``), and
+the ``mix:`` content-hash bucket it shares with the mixture stage of the
+flagship curation pipeline, ``plans.quality.curate_corpus_v8``.
 
-Stages (all existing operators, composed):
-
-1. exact dedup      — keep the lowest doc_id per md5(text)
-2. near-dup removal — SimHash fingerprint equality; drop the higher id of
-                      every duplicate pair (survivor = lowest id in group)
-3. quality gate     — composite quality score ≥ 0.5 (textstats)
-4. language gate    — marker-word language ID == 'en'
-5. split assignment — deterministic md5-hash split (train/holdout 90/10),
-                      the same content-hash Bernoulli as ``sample_hash``:
-                      membership depends only on doc_id, so re-runs and
-                      backfills select identical rows
-
-Scale shape: stages 1-2 shuffle only (hash, id) pairs — never text; 3-5
-are narrow maps fused into one stage by codegen. The oracle reproduces
-every stage in DuckDB (md5 fingerprints, integer SimHash, fixed
-arithmetic quality score), so the full pipeline is hash-verified
-end-to-end, not just per-operator.
-
-No reference counterpart (north-star extension; the reference's closest
-shape is its dedupe-then-filter-then-emit pipelines, wd_tmdb.py:214-262).
+No reference counterpart (north-star extension).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from wikidatabots_spark.functions.scale import pushdown_fence
-from wikidatabots_spark.operators.dedup import simhash
-from wikidatabots_spark.plans.extensions import (
-    _LANGID_ORACLE,
-    _QUALITY_ORACLE,
-    _simhash_oracle,
-)
 from wikidatabots_spark.plans.registry import register
 from wikidatabots_spark.sources.tables import load_table
-
-# split threshold: first 4 md5 hex digits of 'split:'||doc_id, 90% train
-_SPLIT_FRAC = 0.9
-_SPLIT_CUT = int(_SPLIT_FRAC * 65536)
-
-_CURATE_ORACLE = f"""
-WITH qual AS ({_QUALITY_ORACLE}),
-lng AS ({_LANGID_ORACLE}),
-fp AS ({_simhash_oracle()}),
-exact_canon AS (
-    SELECT MIN(doc_id) AS doc_id
-    FROM documents
-    GROUP BY md5(text)
-),
-near_canon AS (
-    SELECT MIN(doc_id) AS doc_id
-    FROM fp
-    GROUP BY simhash
-),
-survivors AS (
-    SELECT e.doc_id FROM exact_canon e JOIN near_canon n USING (doc_id)
-),
-bucket AS (
-    SELECT doc_id,
-           (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-         + (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-         + (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-         + (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 4, 1)) - 1) AS b
-    FROM documents
-)
-SELECT s.doc_id,
-       lng.lang_guess,
-       qual.quality,
-       CASE WHEN bucket.b < {_SPLIT_CUT} THEN 'train' ELSE 'holdout' END AS split
-FROM survivors s
-JOIN qual ON qual.doc_id = s.doc_id
-JOIN lng ON lng.doc_id = s.doc_id
-JOIN bucket ON bucket.doc_id = s.doc_id
-WHERE qual.quality >= 0.5 AND lng.lang_guess = 'en'
-"""
-
-
-_SPLIT_BUCKET_SQL = """
-    (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-  + (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-  + (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-  + (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 4, 1)) - 1)
-"""
-
-
-def _curate_v2_oracle() -> str:
-    from wikidatabots_spark.plans.extensions import (
-        _REPETITION_ORACLE,
-        _WINNOW_PAIRS_ORACLE,
-    )
-
-    return f"""
-WITH RECURSIVE
-qual AS ({_QUALITY_ORACLE}),
-lng AS ({_LANGID_ORACLE}),
-rep AS ({_REPETITION_ORACLE}),
-pairs AS ({_WINNOW_PAIRS_ORACLE}),
-edges AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION ALL SELECT id_b, id_a FROM pairs
-),
-gnodes AS (SELECT DISTINCT u AS node FROM edges),
-reach(node, r) AS (
-    SELECT node, node FROM gnodes
-    UNION
-    SELECT e.u, reach.r FROM reach JOIN edges e ON e.v = reach.node
-),
-comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
-dup_nodes AS (SELECT node FROM comp WHERE node != component),
-exact_canon AS (
-    SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-),
-survivors AS (
-    SELECT doc_id FROM exact_canon
-    WHERE doc_id NOT IN (SELECT node FROM dup_nodes)
-),
-bucket AS (
-    SELECT doc_id, {_SPLIT_BUCKET_SQL} AS b FROM documents
-)
-SELECT s.doc_id, lng.lang_guess, qual.quality,
-       rep.type_token_ratio, rep.dup_2gram_frac,
-       CASE WHEN bucket.b < {_SPLIT_CUT} THEN 'train' ELSE 'holdout' END AS split
-FROM survivors s
-JOIN qual ON qual.doc_id = s.doc_id
-JOIN lng ON lng.doc_id = s.doc_id
-JOIN rep ON rep.doc_id = s.doc_id
-JOIN bucket ON bucket.doc_id = s.doc_id
-WHERE qual.quality >= 0.5 AND lng.lang_guess = 'en'
-  AND rep.dup_2gram_frac <= 0.05 AND rep.type_token_ratio >= 0.35
-"""
-
-
-@register("curate_corpus_v2", oracle=_curate_v2_oracle())
-def curate_corpus_v2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r3 flagship composition: exact dedup → winnowing near-dup
-    pairs → CONNECTED COMPONENTS (keep each group's min id) → quality +
-    language + Gopher-repetition gates → deterministic content-hash
-    split. vs curate_corpus (v1): near-dup grouping is transitive (a
-    pair chain collapses to ONE canonical doc, not pairwise survivors)
-    and the repetition gates are new. Every stage shuffles only
-    (hash/id) keys; the gates fuse into one codegen stage; the oracle
-    reproduces the whole pipeline including the component fixed point
-    (recursive CTE)."""
-    from wikidatabots_spark.operators.dedup import (
-        connected_components,
-        winnow_fingerprints,
-        winnow_pairs,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    exact = (
-        d.select(F.md5("text").alias("h"), "doc_id")
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    fps = winnow_fingerprints(d, k=3, window=4)
-    # relative max_df fences hot boilerplate fingerprints before the
-    # f²-prone self-join (the r3 skew-bomb finding); oracle has the cut too
-    pairs = winnow_pairs(fps, d, min_shared=3, max_df=0.2)
-    comp = connected_components(pairs)
-    dup_nodes = comp.where(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id")
-    )
-    survivors = exact.join(dup_nodes, "doc_id", "left_anti")
-    # pushdown_fence: without it Catalyst substitutes the HOF-heavy
-    # score definitions into the gate predicate below (measured 20x).
-    # r14 wave 3: fused gate-counter kernel — bit-identical features
-    # (parity-pinned), one tokenize instead of three private splits
-    from wikidatabots_spark.operators.textstats import (
-        gate_feature_counts,
-        gate_features_from_counts,
-    )
-
-    scored = pushdown_fence(
-        gate_features_from_counts(
-            gate_feature_counts(d, keep_cols=())
-        ).select(
-            "doc_id", "lang_guess", "quality", "type_token_ratio", "dup_2gram_frac"
-        )
-    )
-    split_bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 4
-        ),
-        16,
-        10,
-    ).cast("long")
-    return (
-        survivors.join(scored, "doc_id")
-        .where(
-            (F.col("quality") >= 0.5)
-            & (F.col("lang_guess") == "en")
-            & (F.col("dup_2gram_frac") <= 0.05)
-            & (F.col("type_token_ratio") >= 0.35)
-        )
-        .withColumn(
-            "split",
-            F.when(split_bucket < _SPLIT_CUT, F.lit("train")).otherwise(
-                F.lit("holdout")
-            ),
-        )
-    )
-
 
 _MIX_BUCKET_SQL = """
     (strpos('0123456789abcdef', substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
@@ -257,394 +62,3 @@ def corpus_mix_epochs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, key="doc_id", strata="source", weights={"src0": 1, "src1": 9},
         default_weight=3,
     ).select("doc_id", "source", "epoch")
-
-
-@register("curate_corpus", oracle=_CURATE_ORACLE)
-def curate_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    # 1. exact-dup survivors: lowest id per content hash — only (hash, id)
-    #    pairs shuffle, the text column stays in the scan stage
-    exact = (
-        d.select(F.md5("text").alias("h"), "doc_id")
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    # 2. near-dup survivors: lowest id per SimHash fingerprint
-    near = (
-        simhash(d)
-        .groupBy("simhash")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    survivors = exact.join(near, "doc_id")
-    # 3-5. narrow maps: quality + language + deterministic split, then the
-    #      gates; one codegen stage over the surviving documents. The
-    #      parallelism guard spreads the single-file local scan across the
-    #      cluster width (no-op on real multi-split inputs).
-    from wikidatabots_spark.operators.textstats import (
-        gate_feature_counts,
-        gate_features_from_counts,
-    )
-
-    # r14 wave 3: the fused gate-counter kernel replaces the builder
-    # chain's interpreted per-word work — bit-identical features
-    # (parity-pinned in tests/test_operators.py), one tokenize
-    scored = pushdown_fence(
-        gate_features_from_counts(
-            gate_feature_counts(d, keep_cols=())
-        ).select("doc_id", "lang_guess", "quality")
-    )
-    split_bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 4
-        ),
-        16,
-        10,
-    ).cast("long")
-    return (
-        survivors.join(scored, "doc_id")
-        .where((F.col("quality") >= 0.5) & (F.col("lang_guess") == "en"))
-        .withColumn(
-            "split",
-            F.when(split_bucket < _SPLIT_CUT, F.lit("train")).otherwise(
-                F.lit("holdout")
-            ),
-        )
-    )
-
-
-def _curate_v3_oracle() -> str:
-    from wikidatabots_spark.plans.extensions import (
-        _CLS_ORACLE,
-        _REPETITION_ORACLE,
-        _WINNOW_PAIRS_ORACLE,
-    )
-
-    return f"""
-WITH RECURSIVE
-qual AS ({_QUALITY_ORACLE}),
-lng AS ({_LANGID_ORACLE}),
-rep AS ({_REPETITION_ORACLE}),
-cls AS ({_CLS_ORACLE}),
-pairs AS ({_WINNOW_PAIRS_ORACLE}),
-edges AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION ALL SELECT id_b, id_a FROM pairs
-),
-gnodes AS (SELECT DISTINCT u AS node FROM edges),
-reach(node, r) AS (
-    SELECT node, node FROM gnodes
-    UNION
-    SELECT e.u, reach.r FROM reach JOIN edges e ON e.v = reach.node
-),
-comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
-dup_nodes AS (SELECT node FROM comp WHERE node != component),
-exact_canon AS (
-    SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-),
-survivors AS (
-    SELECT doc_id FROM exact_canon
-    WHERE doc_id NOT IN (SELECT node FROM dup_nodes)
-),
-gated AS (
-    SELECT s.doc_id, d.source
-    FROM survivors s
-    JOIN qual ON qual.doc_id = s.doc_id
-    JOIN lng ON lng.doc_id = s.doc_id
-    JOIN rep ON rep.doc_id = s.doc_id
-    JOIN cls ON cls.doc_id = s.doc_id
-    JOIN documents d ON d.doc_id = s.doc_id
-    WHERE qual.quality >= 0.5 AND lng.lang_guess = 'en'
-      AND rep.dup_2gram_frac <= 0.05 AND rep.type_token_ratio >= 0.35
-      AND cls.keep
-),
-counts AS (
-    SELECT source, CAST(COUNT(*) AS BIGINT) AS cnt,
-           CAST(CASE WHEN source = 'src0' THEN 1
-                     WHEN source = 'src1' THEN 9
-                     ELSE 3 END AS BIGINT) AS wt
-    FROM gated GROUP BY source
-),
-tot AS (
-    SELECT CAST(SUM(cnt) AS BIGINT) AS t, CAST(SUM(wt) AS BIGINT) AS w
-    FROM counts
-),
-rates AS (
-    SELECT source, (wt * t * 65536) // (w * cnt) AS k FROM counts, tot
-),
-mixdocs AS (
-    SELECT g.doc_id, g.source, {_MIX_BUCKET_SQL.replace("doc_id", "g.doc_id")} AS b
-    FROM gated g
-),
-expanded AS (
-    SELECT m.doc_id, m.source,
-           r.k // 65536 + CASE WHEN m.b < r.k % 65536 THEN 1 ELSE 0 END AS n
-    FROM mixdocs m JOIN rates r USING (source)
-),
-final AS (
-    SELECT doc_id, source,
-           CAST(UNNEST(generate_series(1, n)) AS BIGINT) AS epoch
-    FROM expanded WHERE n >= 1
-),
-bucket AS (
-    SELECT doc_id, {_SPLIT_BUCKET_SQL} AS b FROM documents
-)
-SELECT f.doc_id, f.source, f.epoch,
-       CASE WHEN bucket.b < {_SPLIT_CUT} THEN 'train' ELSE 'holdout' END AS split
-FROM final f JOIN bucket ON bucket.doc_id = f.doc_id
-"""
-
-
-def _v3_gated(
-    spark: SparkSession,
-    sf_dir: str,
-    classifier: str = "standin",
-    occ: DataFrame | None = None,
-) -> DataFrame:
-    """The shared v3 gate stack → (doc_id, source): exact dedup →
-    fenced winnow pairs → connected components → quality + language +
-    repetition + classifier gates.
-
-    ``classifier='trained'`` swaps the hash-derived stand-in weight
-    gate for the SELF-TRAINED hashed-NB model (train_hashed_nb on the
-    quality≥0.5 label, score via the broadcast model) — the v7
-    pipeline's single difference from v6. The stand-in's gate is
-    cls_score ≥ 0; the trained gate is the model's ``keep`` verdict —
-    same plan family, learned weights. Pass a precomputed fenced
-    ``occ`` ((doc_id, bucket, cnt), the ``bucket_occurrences`` shape)
-    to share the hashed-occurrence text pass with other consumers —
-    the v8 flagship feeds one table to this gate AND its DSIR gate.
-    """
-    from wikidatabots_spark.operators.dedup import (
-        connected_components,
-        winnow_fingerprints,
-        winnow_pairs,
-    )
-    from wikidatabots_spark.operators.textstats import (
-        bucket_occurrences,
-        score_hashed_nb,
-        train_hashed_nb,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    exact = (
-        d.select(F.md5("text").alias("h"), "doc_id")
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    fps = winnow_fingerprints(d, k=3, window=4)
-    # relative max_df fences hot boilerplate fingerprints before the
-    # f²-prone self-join (the r3 skew-bomb finding); oracle has the cut too
-    pairs = winnow_pairs(fps, d, min_shared=3, max_df=0.2)
-    comp = connected_components(pairs)
-    dup_nodes = comp.where(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id")
-    )
-    survivors = exact.join(dup_nodes, "doc_id", "left_anti")
-    # ONE fused Arrow kernel computes every gate counter in a single
-    # tokenize (r14 wave 2, guide §4.2): the four builders' per-word
-    # IN-list filters, n-gram builds, and md5 classifier weights ran as
-    # interpreted HOF lambdas even after the r14 shared-tokenization
-    # fix; gate_feature_counts moves that per-word work to C-backed
-    # ops, and gate_features_from_counts reassembles the SAME feature
-    # expression trees over the (identical) integers — bit-identical
-    # features, parity-pinned in tests/test_operators.py.
-    from wikidatabots_spark.operators.textstats import (
-        gate_feature_counts,
-        gate_features_from_counts,
-    )
-
-    scored = pushdown_fence(
-        gate_features_from_counts(gate_feature_counts(d)).select(
-            "doc_id", "source", "lang_guess", "quality",
-            "type_token_ratio", "dup_2gram_frac", "cls_score",
-        )
-    )
-    if classifier == "trained":
-        if occ is None:
-            occ = pushdown_fence(bucket_occurrences(d))
-        labels = scored.select(
-            "doc_id", (F.col("quality") >= 0.5).alias("label")
-        )
-        model = train_hashed_nb(d, occ=occ, labels=labels)
-        cls_gate = (
-            score_hashed_nb(d.select("doc_id"), model, occ=occ)
-            .where(F.col("keep"))
-            .select("doc_id")
-        )
-        gate_leg = F.lit(True)
-    else:
-        cls_gate = None
-        gate_leg = F.coalesce(F.col("cls_score") >= 0.0, F.lit(False))
-    out = (
-        survivors.join(scored, "doc_id")
-        .where(
-            (F.col("quality") >= 0.5)
-            & (F.col("lang_guess") == "en")
-            & (F.col("dup_2gram_frac") <= 0.05)
-            & (F.col("type_token_ratio") >= 0.35)
-            & gate_leg
-        )
-        .select("doc_id", "source")
-    )
-    if cls_gate is not None:
-        out = out.join(cls_gate, "doc_id", "left_semi")
-    return out
-
-
-def _mix_and_split(gated: DataFrame) -> DataFrame:
-    from wikidatabots_spark.operators.mixture import mix_epochs
-
-    # the mixture reads its input TWICE — once for the per-source rate
-    # counts, once as the fact side — so fence the gated frame: without
-    # it the whole upstream gate stack re-derives per branch (measured
-    # 4.68 → 3.88 s min on v3 at sf0.1, and the pass spread tightened)
-    gated = pushdown_fence(gated)
-    mixed = mix_epochs(
-        gated, key="doc_id", strata="source",
-        weights={"src0": 1, "src1": 9}, default_weight=3,
-    )
-    split_bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 4
-        ),
-        16,
-        10,
-    ).cast("long")
-    return mixed.select(
-        "doc_id",
-        "source",
-        "epoch",
-        F.when(split_bucket < _SPLIT_CUT, F.lit("train"))
-        .otherwise(F.lit("holdout"))
-        .alias("split"),
-    )
-
-
-@register("curate_corpus_v3", oracle=_curate_v3_oracle())
-def curate_corpus_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full modern pre-training pipeline as ONE oracle-checked query:
-    exact dedup → winnowing near-dup pairs → connected components →
-    quality + language + Gopher-repetition + CLASSIFIER gates →
-    domain-mixture resampling with epochs → deterministic content-hash
-    split. vs v2: adds the fasttext-shaped classifier gate and ends with
-    Pile-style integer-exact mixture (up-sampled sources repeat docs).
-    Every stage shuffles only hashes/ids; gates fuse into one codegen
-    stage; the oracle reproduces the whole thing including the component
-    fixed point and every mixture copy count."""
-    return _mix_and_split(_v3_gated(spark, sf_dir))
-
-
-def _curate_v4_oracle() -> str:
-    from wikidatabots_spark.plans.extensions import (
-        _CLS_ORACLE,
-        _REPETITION_ORACLE,
-        _WINNOW_PAIRS_ORACLE,
-        _semdedup_oracle,
-    )
-
-    return f"""
-WITH RECURSIVE
-qual AS ({_QUALITY_ORACLE}),
-lng AS ({_LANGID_ORACLE}),
-rep AS ({_REPETITION_ORACLE}),
-cls AS ({_CLS_ORACLE}),
-pairs AS ({_WINNOW_PAIRS_ORACLE}),
-edges AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION ALL SELECT id_b, id_a FROM pairs
-),
-gnodes AS (SELECT DISTINCT u AS node FROM edges),
-reach(node, r) AS (
-    SELECT node, node FROM gnodes
-    UNION
-    SELECT e.u, reach.r FROM reach JOIN edges e ON e.v = reach.node
-),
-comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
-dup_nodes AS (SELECT node FROM comp WHERE node != component),
-exact_canon AS (
-    SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-),
-survivors AS (
-    SELECT doc_id FROM exact_canon
-    WHERE doc_id NOT IN (SELECT node FROM dup_nodes)
-),
-sem AS ({_semdedup_oracle(0.3)}),
-semdrop AS (SELECT vec_id AS doc_id FROM sem WHERE NOT is_kept),
-gated AS (
-    SELECT s.doc_id, d.source
-    FROM survivors s
-    JOIN qual ON qual.doc_id = s.doc_id
-    JOIN lng ON lng.doc_id = s.doc_id
-    JOIN rep ON rep.doc_id = s.doc_id
-    JOIN cls ON cls.doc_id = s.doc_id
-    JOIN documents d ON d.doc_id = s.doc_id
-    WHERE qual.quality >= 0.5 AND lng.lang_guess = 'en'
-      AND rep.dup_2gram_frac <= 0.05 AND rep.type_token_ratio >= 0.35
-      AND cls.keep
-      AND s.doc_id NOT IN (SELECT doc_id FROM semdrop)
-),
-counts AS (
-    SELECT source, CAST(COUNT(*) AS BIGINT) AS cnt,
-           CAST(CASE WHEN source = 'src0' THEN 1
-                     WHEN source = 'src1' THEN 9
-                     ELSE 3 END AS BIGINT) AS wt
-    FROM gated GROUP BY source
-),
-tot AS (
-    SELECT CAST(SUM(cnt) AS BIGINT) AS t, CAST(SUM(wt) AS BIGINT) AS w
-    FROM counts
-),
-rates AS (
-    SELECT source, (wt * t * 65536) // (w * cnt) AS k FROM counts, tot
-),
-mixdocs AS (
-    SELECT g.doc_id, g.source, {_MIX_BUCKET_SQL.replace("doc_id", "g.doc_id")} AS b
-    FROM gated g
-),
-expanded AS (
-    SELECT m.doc_id, m.source,
-           r.k // 65536 + CASE WHEN m.b < r.k % 65536 THEN 1 ELSE 0 END AS n
-    FROM mixdocs m JOIN rates r USING (source)
-),
-final AS (
-    SELECT doc_id, source,
-           CAST(UNNEST(generate_series(1, n)) AS BIGINT) AS epoch
-    FROM expanded WHERE n >= 1
-),
-bucket AS (
-    SELECT doc_id, {_SPLIT_BUCKET_SQL} AS b FROM documents
-)
-SELECT f.doc_id, f.source, f.epoch,
-       CASE WHEN bucket.b < {_SPLIT_CUT} THEN 'train' ELSE 'holdout' END AS split
-FROM final f JOIN bucket ON bucket.doc_id = f.doc_id
-"""
-
-
-@register("curate_corpus_v4", oracle=_curate_v4_oracle())
-def curate_corpus_v4_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v3 plus a CROSS-TABLE SEMANTIC gate: documents whose embedding
-    (embeddings.vec_id = doc_id, where one exists) was flagged a
-    semantic duplicate by SemDeDup are dropped before the mixture —
-    text-level dedup (exact + winnow/CC) and embedding-space dedup
-    composed in one oracle-checked pipeline. Docs without embeddings
-    pass the gate untouched (anti-join semantics). The oracle embeds
-    the full kmeans-unrolled SemDeDup verdict inside the recursive-CTE
-    curation program — the entire multi-modal pipeline is hash-checked
-    end-to-end."""
-    from wikidatabots_spark.operators.similarity import semdedup_flags
-
-    gated = _v3_gated(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    # 0.3 is deliberately aggressive (diversity pruning, not just
-    # near-dup removal) so the cross-table gate provably fires on the
-    # test corpus — the oracle then pins the anti-join itself, not a
-    # vacuous no-op
-    semdrop = (
-        semdedup_flags(emb, k=4, rounds=2, threshold=0.3)
-        .where(~F.col("is_kept"))
-        .select(F.col("vec_id").alias("doc_id"))
-    )
-    return _mix_and_split(gated.join(semdrop, "doc_id", "left_anti"))

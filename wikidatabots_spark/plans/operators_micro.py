@@ -459,8 +459,8 @@ FROM customer
 )
 def op_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op_replace_literal + op_regexp_extract_all + op_pl_format (T4
-    null-propagating format, folded r4 to free a window slot for
-    curate_corpus_v4) + op_regexp_extract_null (T1 null-on-miss, folded
+    null-propagating format, folded r4 to free a window slot for the
+    curation flagship) + op_regexp_extract_null (T1 null-on-miss, folded
     late-r4 to free a slot for text_lm_score — both the match and the
     guaranteed-miss leg, so the Polars null-vs-'' gap stays pinned) as
     one tagged frame (driver-window budget; individuals stay for the

@@ -3254,172 +3254,60 @@ def ingest_pipeline_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# curate_corpus_v6 — the flagship pipeline with DATA-DERIVED mixture weights
+# curate_corpus_v8 — the flagship curation pipeline
 # ---------------------------------------------------------------------------
 
-_V5_WT_SQL = """CAST(CASE WHEN source = 'src0' THEN 1
-                     WHEN source = 'src1' THEN 9
-                     ELSE 3 END AS BIGINT) AS wt"""
-_V6_WT_SQL = "CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE))) AS BIGINT) AS wt"
+# split threshold: first 4 md5 hex digits of 'split:'||doc_id, 90% train
+_SPLIT_CUT = int(0.9 * 65536)
 
-
-def _curate_v6_oracle() -> str:
-    from wikidatabots_spark.plans.llmdata import _curate_v5_oracle
-
-    v5 = _curate_v5_oracle()
-    assert v5.count(_V5_WT_SQL) == 1, "v5 oracle weight CTE moved"
-    return v5.replace(_V5_WT_SQL, _V6_WT_SQL)
-
-
-@register("curate_corpus_v6", oracle=_curate_v6_oracle())
-def curate_corpus_v6_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v5 with the hand-set mixture weights replaced by DATA-DERIVED
-    temperature weights (shares proportional to sqrt of each source's
-    surviving count — ``corpus_mix_temperature``'s rule applied inside
-    the flagship): the full modern pipeline — exact dedup → winnow/CC
-    components → quality/language/repetition/classifier gates →
-    cross-table SemDeDup gate → LM survivor polish → sqrt-frequency
-    mixture with epochs → content-hash split — now needs NO curated
-    weight list to maintain as sources churn. The oracle is the entire
-    v5 recursive-CTE program with only the weight expression swapped
-    (asserted single-site), so the diff between pipelines is exactly
-    the mixture policy.
-
-    Scale: identical to v5 (the gate stack and fences are shared code);
-    the temperature weights add only a |sources|-row aggregate to the
-    already-|sources|-row rate table.
-    """
-    from wikidatabots_spark.functions.scale import pushdown_fence
-    from wikidatabots_spark.operators.lm import with_lm_score
-    from wikidatabots_spark.operators.mixture import mix_temperature
-    from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _SPLIT_CUT, _v3_gated
-    from wikidatabots_spark.plans.llmdata import _v5_lmdrop
-
-    d = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    semdrop = (
-        semdedup_flags(emb, k=4, rounds=2, threshold=0.3)
-        .where(~F.col("is_kept"))
-        .select(F.col("vec_id").alias("doc_id"))
-    )
-    gated4 = pushdown_fence(
-        _v3_gated(spark, sf_dir).join(semdrop, "doc_id", "left_anti")
-    )
-    lmdrop = _v5_lmdrop(with_lm_score(d, score_ids=gated4), gated4)
-    final_gated = pushdown_fence(gated4.join(lmdrop, "doc_id", "left_anti"))
-    mixed = mix_temperature(final_gated, key="doc_id", strata="source")
-    split_bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
-    return mixed.select(
-        "doc_id",
-        "source",
-        "epoch",
-        F.when(split_bucket < _SPLIT_CUT, F.lit("train"))
-        .otherwise(F.lit("holdout"))
-        .alias("split"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# curate_corpus_v7 — the flagship with the SELF-TRAINED classifier gate
-# ---------------------------------------------------------------------------
-
-
-def _curate_v7_oracle() -> str:
-    from wikidatabots_spark.plans.extensions import (
-        _CLS_ORACLE,
-        _CLS_TRAINED_ORACLE,
-    )
-
-    v6 = _curate_v6_oracle()
-    old = f"cls AS ({_CLS_ORACLE})"
-    assert v6.count(old) == 1, "v6 oracle classifier CTE moved"
-    return v6.replace(old, f"cls AS ({_CLS_TRAINED_ORACLE})")
-
-
-@register("curate_corpus_v7", oracle=_curate_v7_oracle())
-def curate_corpus_v7_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v6 with the stand-in classifier gate replaced by the SELF-TRAINED
-    hashed-NB model (the v5→v6 single-site-swap pattern applied to the
-    classifier): exact dedup → winnow/CC → quality/language/repetition
-    gates → TRAINED-classifier keep (train_hashed_nb on the
-    quality≥0.5 label, broadcast model, keep = score≥0) → cross-table
-    SemDeDup → LM survivor polish → data-derived temperature mixture →
-    content-hash split. The oracle is the entire v6 recursive-CTE
-    program with only the classifier CTE swapped for the trained-NB
-    derivation (asserted single-site), so the learned weights inside
-    the flagship are themselves hash-verified end-to-end — the last
-    stand-in in the curation path now carries real learned signal.
-
-    Scale: adds one (id, bucket, cnt) occurrence pass over the corpus
-    (fenced, shared by train and score) and a ≤1024-row broadcast to
-    v6's audited shape; everything else is shared code.
-    """
-    from wikidatabots_spark.functions.scale import pushdown_fence
-    from wikidatabots_spark.operators.lm import with_lm_score
-    from wikidatabots_spark.operators.mixture import mix_temperature
-    from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _SPLIT_CUT, _v3_gated
-    from wikidatabots_spark.plans.llmdata import _v5_lmdrop
-
-    d = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    semdrop = (
-        semdedup_flags(emb, k=4, rounds=2, threshold=0.3)
-        .where(~F.col("is_kept"))
-        .select(F.col("vec_id").alias("doc_id"))
-    )
-    gated4 = pushdown_fence(
-        _v3_gated(spark, sf_dir, classifier="trained").join(
-            semdrop, "doc_id", "left_anti"
-        )
-    )
-    lmdrop = _v5_lmdrop(with_lm_score(d, score_ids=gated4), gated4)
-    final_gated = pushdown_fence(gated4.join(lmdrop, "doc_id", "left_anti"))
-    mixed = mix_temperature(final_gated, key="doc_id", strata="source")
-    split_bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
-    return mixed.select(
-        "doc_id",
-        "source",
-        "epoch",
-        F.when(split_bucket < _SPLIT_CUT, F.lit("train"))
-        .otherwise(F.lit("holdout"))
-        .alias("split"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# curate_corpus_v8 — the flagship with the DSIR domain-affinity gate
-# ---------------------------------------------------------------------------
+_SPLIT_BUCKET_SQL = """
+    (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
+  + (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
+  + (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
+  + (strpos('0123456789abcdef', substr(md5('split:' || CAST(doc_id AS VARCHAR)), 4, 1)) - 1)
+"""
 
 
 def _curate_v8_oracle() -> str:
-    from wikidatabots_spark.plans.llmdata import _DSIR_SC_CTES
+    from wikidatabots_spark.plans.curation import _MIX_BUCKET_SQL
+    from wikidatabots_spark.plans.extensions import (
+        _CLS_TRAINED_ORACLE,
+        _LANGID_ORACLE,
+        _QUALITY_ORACLE,
+        _REPETITION_ORACLE,
+        _WINNOW_PAIRS_ORACLE,
+        _semdedup_oracle,
+    )
+    from wikidatabots_spark.plans.llmdata import _DSIR_SC_CTES, _LM_ORACLE
 
-    v7 = _curate_v7_oracle()
-    # splice 1: the DSIR scoring CTEs (dsir_-prefixed, collision-free)
-    # ahead of the semdedup CTE
-    anchor = "sem AS ("
-    assert v7.count(anchor) == 1, "v7 oracle semdedup CTE moved"
-    v8 = v7.replace(
-        anchor,
-        f"""{_DSIR_SC_CTES},
+    return f"""
+WITH RECURSIVE
+qual AS ({_QUALITY_ORACLE}),
+lng AS ({_LANGID_ORACLE}),
+rep AS ({_REPETITION_ORACLE}),
+cls AS ({_CLS_TRAINED_ORACLE}),
+lm AS ({_LM_ORACLE}),
+pairs AS ({_WINNOW_PAIRS_ORACLE}),
+edges AS (
+    SELECT id_a AS u, id_b AS v FROM pairs
+    UNION ALL SELECT id_b, id_a FROM pairs
+),
+gnodes AS (SELECT DISTINCT u AS node FROM edges),
+reach(node, r) AS (
+    SELECT node, node FROM gnodes
+    UNION
+    SELECT e.u, reach.r FROM reach JOIN edges e ON e.v = reach.node
+),
+comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
+dup_nodes AS (SELECT node FROM comp WHERE node != component),
+exact_canon AS (
+    SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
+),
+survivors AS (
+    SELECT doc_id FROM exact_canon
+    WHERE doc_id NOT IN (SELECT node FROM dup_nodes)
+),
+{_DSIR_SC_CTES},
 dsir_ntok AS (
     SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tok
     FROM dsir_occ WHERE source <> 'src0' GROUP BY doc_id
@@ -3433,58 +3321,228 @@ dsir_drop AS (
     SELECT s.doc_id FROM dsir_sc s JOIN dsir_ntok n USING (doc_id), dsir_stats
     WHERE s.imp_ppm * dsir_stats.s_tok < n.n_tok * dsir_stats.s_imp
 ),
-{anchor}""",
+sem AS ({_semdedup_oracle(0.3)}),
+semdrop AS (SELECT vec_id AS doc_id FROM sem WHERE NOT is_kept),
+gated4 AS (
+    SELECT s.doc_id, d.source
+    FROM survivors s
+    JOIN qual ON qual.doc_id = s.doc_id
+    JOIN lng ON lng.doc_id = s.doc_id
+    JOIN rep ON rep.doc_id = s.doc_id
+    JOIN cls ON cls.doc_id = s.doc_id
+    JOIN documents d ON d.doc_id = s.doc_id
+    WHERE qual.quality >= 0.5 AND lng.lang_guess = 'en'
+      AND rep.dup_2gram_frac <= 0.05 AND rep.type_token_ratio >= 0.35
+      AND cls.keep
+      AND s.doc_id NOT IN (SELECT doc_id FROM semdrop)
+      AND s.doc_id NOT IN (SELECT doc_id FROM dsir_drop)
+),
+lmranked AS (
+    SELECT g.doc_id,
+           row_number() OVER (ORDER BY l.lm_score, l.doc_id) AS lrn,
+           COUNT(*) OVER () AS n_gated
+    FROM gated4 g JOIN lm l ON l.doc_id = g.doc_id
+),
+lmdrop AS (SELECT doc_id FROM lmranked WHERE lrn <= n_gated // 4),
+gated AS (
+    SELECT * FROM gated4
+    WHERE doc_id NOT IN (SELECT doc_id FROM lmdrop)
+),
+counts AS (
+    SELECT source, CAST(COUNT(*) AS BIGINT) AS cnt,
+           CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE))) AS BIGINT) AS wt
+    FROM gated GROUP BY source
+),
+tot AS (
+    SELECT CAST(SUM(cnt) AS BIGINT) AS t, CAST(SUM(wt) AS BIGINT) AS w
+    FROM counts
+),
+rates AS (
+    SELECT source, (wt * t * 65536) // (w * cnt) AS k FROM counts, tot
+),
+mixdocs AS (
+    SELECT g.doc_id, g.source, {_MIX_BUCKET_SQL.replace("doc_id", "g.doc_id")} AS b
+    FROM gated g
+),
+expanded AS (
+    SELECT m.doc_id, m.source,
+           r.k // 65536 + CASE WHEN m.b < r.k % 65536 THEN 1 ELSE 0 END AS n
+    FROM mixdocs m JOIN rates r USING (source)
+),
+final AS (
+    SELECT doc_id, source,
+           CAST(UNNEST(generate_series(1, n)) AS BIGINT) AS epoch
+    FROM expanded WHERE n >= 1
+),
+bucket AS (
+    SELECT doc_id, {_SPLIT_BUCKET_SQL} AS b FROM documents
+)
+SELECT f.doc_id, f.source, f.epoch,
+       CASE WHEN bucket.b < {_SPLIT_CUT} THEN 'train' ELSE 'holdout' END AS split
+FROM final f JOIN bucket ON bucket.doc_id = f.doc_id
+"""
+
+
+def _gate_stack(spark: SparkSession, sf_dir: str, occ: DataFrame) -> DataFrame:
+    """The document gate stack → (doc_id, source): exact dedup → fenced
+    winnow pairs → connected components → quality + language +
+    repetition gates → the SELF-TRAINED hashed-NB classifier's ``keep``
+    verdict (train_hashed_nb on the quality≥0.5 label, scored via the
+    broadcast model). ``occ`` is the fenced (doc_id, bucket, cnt)
+    hashed-occurrence table (the ``bucket_occurrences`` shape) the
+    classifier trains and scores on; the flagship shares it with its
+    DSIR gate so the corpus is tokenized into buckets once.
+    """
+    from wikidatabots_spark.functions.scale import pushdown_fence
+    from wikidatabots_spark.operators.dedup import (
+        connected_components,
+        winnow_fingerprints,
+        winnow_pairs,
     )
-    # splice 2: the gate itself, right after the semdedup anti-membership
-    gate = "AND s.doc_id NOT IN (SELECT doc_id FROM semdrop)"
-    assert v8.count(gate) == 1, "v7 oracle semdrop gate moved"
-    return v8.replace(
-        gate,
-        gate + "\n      AND s.doc_id NOT IN (SELECT doc_id FROM dsir_drop)",
+    from wikidatabots_spark.operators.textstats import (
+        gate_feature_counts,
+        gate_features_from_counts,
+        score_hashed_nb,
+        train_hashed_nb,
+    )
+
+    d = load_table(spark, sf_dir, "documents")
+    exact = (
+        d.select(F.md5("text").alias("h"), "doc_id")
+        .groupBy("h")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+    fps = winnow_fingerprints(d, k=3, window=4)
+    # relative max_df fences hot boilerplate fingerprints before the
+    # f²-prone self-join (the r3 skew-bomb finding); oracle has the cut too
+    pairs = winnow_pairs(fps, d, min_shared=3, max_df=0.2)
+    comp = connected_components(pairs)
+    dup_nodes = comp.where(F.col("node") != F.col("component")).select(
+        F.col("node").alias("doc_id")
+    )
+    survivors = exact.join(dup_nodes, "doc_id", "left_anti")
+    # ONE fused Arrow kernel computes every gate counter in a single
+    # tokenize (r14 wave 2, guide §4.2): the four builders' per-word
+    # IN-list filters and n-gram builds ran as interpreted HOF lambdas
+    # even after the r14 shared-tokenization fix; gate_feature_counts
+    # moves that per-word work to C-backed ops, and
+    # gate_features_from_counts reassembles the SAME feature expression
+    # trees over the (identical) integers — bit-identical features,
+    # parity-pinned in tests/test_operators.py.
+    scored = pushdown_fence(
+        gate_features_from_counts(gate_feature_counts(d)).select(
+            "doc_id", "source", "lang_guess", "quality",
+            "type_token_ratio", "dup_2gram_frac",
+        )
+    )
+    labels = scored.select("doc_id", (F.col("quality") >= 0.5).alias("label"))
+    model = train_hashed_nb(d, occ=occ, labels=labels)
+    cls_gate = (
+        score_hashed_nb(d.select("doc_id"), model, occ=occ)
+        .where(F.col("keep"))
+        .select("doc_id")
+    )
+    return (
+        survivors.join(scored, "doc_id")
+        .where(
+            (F.col("quality") >= 0.5)
+            & (F.col("lang_guess") == "en")
+            & (F.col("dup_2gram_frac") <= 0.05)
+            & (F.col("type_token_ratio") >= 0.35)
+        )
+        .select("doc_id", "source")
+        .join(cls_gate, "doc_id", "left_semi")
+    )
+
+
+def _lm_drop(lm_scored: DataFrame, gated: DataFrame) -> DataFrame:
+    """The LM-quality polish: rank the GATED survivor set by LM score
+    and return its bottom quarter (exact rank, n div 4) to drop.
+    Relative-to-survivors — an absolute threshold or a whole-corpus
+    percentile is structurally vacuous on a heavily-gated set
+    (measured: the corpus-level bottom-10% band had zero overlap with
+    the 5-doc survivor set at sf0.001) — and adaptive, so the gate
+    provably fires at any scale with ≥4 survivors.
+
+    The rank rides :func:`bucketed_global_rank` (VERDICT r5 next #1):
+    production gate stacks keep tens of percent of the corpus, so the
+    survivor set is NOT safely one-partition-sized — the two-phase form
+    keeps every fact-table window partitioned by the lm_score bucket
+    (~1k ledger rows over the [0, 1e6] ppm range) and the count is a
+    broadcast 1-row aggregate instead of an unbounded global window.
+    NULL lm_scores (< 2-word docs) bucket below the real range,
+    matching Spark's ASC NULLS FIRST placement."""
+    from wikidatabots_spark.functions.scale import (
+        bucketed_global_rank,
+        pushdown_fence,
+    )
+
+    # fence: the scored survivor frame feeds the ledger aggregate, the
+    # fact-side rank join, AND the count — unfenced, the bigram-LM
+    # scoring pipeline would execute three times
+    joined = pushdown_fence(gated.select("doc_id").join(lm_scored, "doc_id"))
+    n = joined.agg(F.count(F.lit(1)).cast("long").alias("n_gated"))
+    ranked = bucketed_global_rank(
+        joined,
+        bucket=F.floor(
+            F.coalesce(F.col("lm_score"), F.lit(-1024.0)) / F.lit(1024.0)
+        ),
+        order=[F.col("lm_score").asc(), F.col("doc_id").asc()],
+        rn="lrn",
+    )
+    return (
+        ranked.crossJoin(F.broadcast(n))
+        .where(F.col("lrn") <= F.expr("n_gated div 4"))
+        .select("doc_id")
     )
 
 
 @register("curate_corpus_v8", oracle=_curate_v8_oracle())
 def curate_corpus_v8_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v7 with a DSIR DOMAIN-AFFINITY gate added to the stack (the
-    single-site-extension pattern the v5→v6→v7 chain established):
-    exact dedup → winnow/CC → quality/language/repetition gates →
-    trained-classifier keep → cross-table SemDeDup → **drop raw-pool
+    """The full modern pre-training curation pipeline as ONE
+    oracle-checked query: exact dedup → winnow/CC near-dup components →
+    quality/language/repetition gates → trained-classifier keep →
+    cross-table SemDeDup (documents whose embedding was flagged a
+    semantic duplicate; docs without embeddings pass) → **drop raw-pool
     docs whose PER-TOKEN DSIR affinity is below the raw pool's overall
     per-token rate** (target-source docs pass untouched; the raw
-    importance SUM is length-correlated — with it, 38 of v7's 40
-    sf0.01 survivors died because quality gates favor long docs — so
-    the gate compares imp_i·Σn ≥ n_i·Σimp, the integer cross-multiply
-    of per-token averages, no division anywhere) → LM
-    survivor polish → temperature mixture → content-hash split. This is
-    DSIR doing its actual job — steering a pretraining corpus toward a
-    target domain inside the full curation stack — rather than standing
-    alone. The oracle is the entire v7 recursive-CTE program with the
-    DSIR CTEs and one anti-membership spliced in (both asserted
-    single-site), so the whole composition stays hash-verified.
+    importance SUM is length-correlated — with it, 38 of 40 sf0.01
+    survivors died because quality gates favor long docs — so the gate
+    compares imp_i·Σn ≥ n_i·Σimp, the integer cross-multiply of
+    per-token averages, no division anywhere) → LM survivor polish
+    (bottom quarter by corpus-trained bigram LM score dropped) →
+    sqrt-frequency temperature mixture with epochs → content-hash
+    split. The oracle reproduces the whole program in one
+    recursive-CTE query — component fixed point, learned classifier
+    and LM models, SemDeDup verdicts and every mixture copy count.
+
+    Every stage stays registered on its own for the local gate:
+    ``dedup_winnow``, ``text_repetition``, ``text_classifier_trained``,
+    ``dedup_semantic``, ``corpus_dsir_select``, ``text_lm_score`` and
+    ``corpus_mix_temperature``.
 
     Scale: ONE hashed-occurrence pass over the corpus feeds BOTH the
-    trained-classifier gate and this DSIR gate — the (doc_id, source,
+    trained-classifier gate and the DSIR gate — the (doc_id, source,
     bucket, cnt) table is fenced once and the NB path projects source
     away (same ``_token_bucket`` feature space, so the shared table is
-    row-identical to each gate's private one; VERDICT r9 next #5 —
-    previously they priced separately). On top of that: a ≤1024-row
-    broadcast model, a 1-row broadcast stats aggregate, and one
-    anti-join — nothing unbounded.
+    row-identical to each gate's private one; VERDICT r9 next #5).
+    Every dedup stage shuffles only hashes/ids; the gates fuse into one
+    codegen stage; on top of that: ≤1024-row broadcast models, a 1-row
+    broadcast stats aggregate, and anti-joins — nothing unbounded.
     """
     from wikidatabots_spark.functions.scale import pushdown_fence
     from wikidatabots_spark.operators.lm import with_lm_score
     from wikidatabots_spark.operators.mixture import mix_temperature
     from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _SPLIT_CUT, _v3_gated
-    from wikidatabots_spark.plans.llmdata import (
-        _v5_lmdrop,
-        dsir_occurrences,
-        dsir_scores,
-    )
+    from wikidatabots_spark.plans.llmdata import dsir_occurrences, dsir_scores
 
     d = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
+    # 0.3 is deliberately aggressive (diversity pruning, not just
+    # near-dup removal) so the cross-table gate provably fires on the
+    # test corpus — the oracle then pins the anti-join itself, not a
+    # vacuous no-op
     semdrop = (
         semdedup_flags(emb, k=4, rounds=2, threshold=0.3)
         .where(~F.col("is_kept"))
@@ -3513,18 +3571,19 @@ def curate_corpus_v8_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id")
     )
-    gated4 = pushdown_fence(
-        _v3_gated(
-            spark,
-            sf_dir,
-            classifier="trained",
-            occ=occ.select("doc_id", "bucket", "cnt"),
-        )
+    # fence the survivor set: BOTH the LM rank branch and the final
+    # anti-join read it — unfenced, the whole gate + semdedup subtree
+    # executes twice (measured ~+4 s at sf0.1)
+    gated = pushdown_fence(
+        _gate_stack(spark, sf_dir, occ.select("doc_id", "bucket", "cnt"))
         .join(semdrop, "doc_id", "left_anti")
         .join(dsirdrop, "doc_id", "left_anti")
     )
-    lmdrop = _v5_lmdrop(with_lm_score(d, score_ids=gated4), gated4)
-    final_gated = pushdown_fence(gated4.join(lmdrop, "doc_id", "left_anti"))
+    # score_ids=gated (r14): only survivor scores are consumed — the
+    # scoring aggregate runs over the survivor slice; the model still
+    # trains on the full corpus (same rows out, oracle-pinned)
+    lmdrop = _lm_drop(with_lm_score(d, score_ids=gated), gated)
+    final_gated = pushdown_fence(gated.join(lmdrop, "doc_id", "left_anti"))
     mixed = mix_temperature(final_gated, key="doc_id", strata="source")
     split_bucket = F.conv(
         F.substring(

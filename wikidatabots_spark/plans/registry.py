@@ -45,8 +45,8 @@ REGISTRY: dict[str, Entry] = {}
 # extension queries accumulate driver-side (not just local-gate) signal
 # across rounds. Bump _ROTATION_ROUND once per round; the seated slice
 # advances by _N_ROTATING each bump and wraps. Demoted-from-core
-# veterans (TPC-H q3/q5/q10, sql_region_revenue, curate_corpus v1/v3,
-# corpus_mix_epochs) live in the pool and come back around; their hash
+# veterans (TPC-H q3/q5/q10, sql_region_revenue, corpus_mix_epochs)
+# live in the pool and come back around; their hash
 # checks still run every round in the local gate.
 _CORE: list[str] = [
     # §2 micro-queries (one per operator family; the O3 sampling pair,
@@ -111,17 +111,11 @@ _CORE: list[str] = [
     "asof_purchase_signup",
     "sketch_count_min",
     "dedup_winnow",
-    # promoted r4 (VERDICT r3 next #5): the full modern pipeline (CC +
-    # classifier + mixture) and the mixture operator get hard-signal rows
-    # promoted late-r4 (T4 folded into the op_strings slot), upgraded
-    # r4b, r4d, and r5: the cross-table text+embedding curation
-    # flagship — LM-score survivor polish, data-derived temperature
-    # mixture weights (v6), the SELF-TRAINED classifier gate (v7), and
-    # the length-neutral DSIR domain-affinity gate (v8, seated r8).
-    # Each vN's oracle is the previous program plus asserted
-    # single-site splices, so v8 strictly supersedes v7/v6/v5/v4 in
-    # what the driver hash-verifies; the earlier versions stay
-    # registered and locally gated.
+    # the cross-table text+embedding curation flagship, the one
+    # registered curation pipeline: CC near-dup components, the
+    # SELF-TRAINED classifier gate, SemDeDup, the length-neutral DSIR
+    # domain-affinity gate, LM-score survivor polish and data-derived
+    # temperature mixture weights in one oracle-checked query
     "curate_corpus_v8",
     # promoted r4b (T1 regexp_extract_null folded into op_strings too):
     # the CCNet-shaped LM quality ranking
@@ -141,7 +135,7 @@ _CORE: list[str] = [
     "dedup_components_incremental",
     # promoted r5 (op_scalar_micro/op_dates merged): the self-trained
     # NB classifier — the driver hash-checks the LEARNED model
-    # directly (VERDICT r4 next #6), complementing curate_corpus_v7's
+    # directly (VERDICT r4 next #6), complementing curate_corpus_v8's
     # composed check
     "text_classifier_trained",
     # seated r8 (VERDICT r7 next #2, window seats freed above), merged
@@ -199,8 +193,6 @@ _EXTENSION_POOL: list[str] = [
     "q5_local_supplier_volume",
     "q10_returned_items",
     "sql_region_revenue",
-    "curate_corpus",
-    "curate_corpus_v3",
     "corpus_mix_epochs",
     # r12 additions (appended so earlier rounds' slices are unchanged)
     "dedup_skew_hotbucket",
@@ -229,7 +221,7 @@ _EXTENSION_POOL: list[str] = [
 # CORRECTNESS_r{N}.json at the repo root (the driver commits round N-1's
 # record when round N opens), so a forgotten bump fails pytest loudly
 # instead of silently re-seating the previous rotation slice (ADVICE r11).
-_ROTATION_ROUND = 14
+_ROTATION_ROUND = 16
 _N_ROTATING = 6
 
 _offset = ((_ROTATION_ROUND - 11) * _N_ROTATING) % len(_EXTENSION_POOL)

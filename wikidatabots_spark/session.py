@@ -15,9 +15,16 @@ the same code scales to a multi-executor cluster:
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_mem(meminfo: str) -> str:
+    """Half of ``MemTotal`` in a ``/proc/meminfo`` text, capped at 32g."""
+    kib = int(re.search(r"^MemTotal:\s+(\d+) kB$", meminfo, re.M).group(1))
+    return f"{min(kib // 2048, 32 * 1024)}m"
 
 
 def get_spark(
@@ -27,13 +34,19 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32);
+    the driver heap is ``$SPARK_GRAFT_DRIVER_MEM``, by default half the
+    host's RAM capped at 32g.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if driver_mem is None:
+        with open("/proc/meminfo") as f:
+            driver_mem = _default_driver_mem(f.read())
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -79,10 +92,12 @@ def get_spark(
         )
         # local[N] puts all executor work on the driver heap: 32 task
         # threads in 8g spent whole stages in GC mid-suite (measured 2-3x
-        # per-query swings); 32g on the 128 GiB test box keeps GC out of
-        # the numbers. On a real cluster executor memory is sized per-node
-        # and this knob only feeds the planner/collects.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # per-query swings); 32g on a 128 GiB box keeps GC out of the
+        # numbers. The default takes half the host's RAM up to that 32g,
+        # so a smaller host is not OOM-killed by its own heap. On a real
+        # cluster executor memory is sized per-node and this knob only
+        # feeds the planner/collects.
+        .config("spark.driver.memory", driver_mem)
         # This host exhibits guest-invisible multi-minute stalls (the
         # bench protocol documents 1.4s ↔ 17s swings at idle loadavg;
         # r12 captured a 245s full-JVM freeze in a -s pytest log). At

@@ -41,29 +41,6 @@ DOCS_FILE_SCHEMA = StructType(
     ]
 )
 
-# Phase profiler (guide §1: measure first). Off unless SPARK_GRAFT_PROF=1;
-# prints wall-clock deltas between sink phases to stderr so per-batch cost
-# attributes to a phase (probe, CC, write, fold) instead of one opaque
-# number. No effect on any plan.
-_PROF = os.environ.get("SPARK_GRAFT_PROF") == "1"
-_PROF_T: list[float] = [0.0]
-
-
-def _pmark(label: str) -> None:
-    if not _PROF:
-        return
-    import sys
-    import time
-
-    now = time.perf_counter()
-    print(
-        f"      [prof] +{now - _PROF_T[0]:6.3f}s {label}",
-        file=sys.stderr,
-        flush=True,
-    )
-    _PROF_T[0] = now
-
-
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents table (drop-zone staging,
     same pattern as ``read_events_stream``; documents carry no event
@@ -737,7 +714,6 @@ def dedup_graph_maintenance(
 
         spark = batch.sparkSession
         batch_id = int(batch_id)
-        _pmark(f"graph b{batch_id}: enter")
         if op_col in batch.columns:
             deletes = pushdown_fence(
                 batch.where(F.col(op_col) == F.lit("delete")).select("doc_id")
@@ -778,7 +754,6 @@ def dedup_graph_maintenance(
             delta = connected_components(band_pairs(bands_new)).select(
                 "node", "component"
             )
-            _pmark(f"graph b{batch_id}: init CC")
             _idx_fut = _idx_pool.submit(_index_write)
         else:
             # Building the merged-labels fence COMPILES a full physical
@@ -796,7 +771,6 @@ def dedup_graph_maintenance(
             )
             if op_col in batch.columns and deletes is not None:
                 prior_labels = _labels_fut.result()
-                _pmark(f"graph b{batch_id}: merged-labels plan built")
             members = None
             recomputed_del = None
             if deletes is not None:
@@ -844,12 +818,10 @@ def dedup_graph_maintenance(
                 .distinct()
                 .collect()
             ]
-            _pmark(f"graph b{batch_id}: sign + pfx collect")
             if deletes is None:
                 # insert-only batch: the merged-labels fence build just
                 # overlapped with the signature job above — join it here
                 post_labels = _labels_fut.result()
-                _pmark(f"graph b{batch_id}: merged-labels plan joined")
             _labels_pool.shutdown(wait=False)
             prior_idx = read_band_index(
                 spark,
@@ -860,7 +832,6 @@ def dedup_graph_maintenance(
             )
             if deletes is not None:
                 prior_idx = prior_idx.join(deletes, "doc_id", "left_anti")
-            _pmark(f"graph b{batch_id}: band-index read built")
             # bands_new materialized (pfx collect) and the probe's file
             # listing done — overlap the index append with the CC path
             _idx_fut = _idx_pool.submit(_index_write)
@@ -926,11 +897,9 @@ def dedup_graph_maintenance(
             # bound the skew tests pin; the distinct's one exchange is
             # what keeps CC's per-round input at the bound)
             edges = probe_cross.unionByName(probe_new).distinct()
-            _pmark(f"graph b{batch_id}: probe built (lazy)")
             ins_cc = pushdown_fence(
                 connected_components(edges).select("node", "component")
             )
-            _pmark(f"graph b{batch_id}: insert CC")
             # expand the contraction: members of touched components take
             # their hub's new label (hubs themselves are in ins_cc)
             touched = (
@@ -978,10 +947,8 @@ def dedup_graph_maintenance(
             "__batch_id",
             spread="node",
         )
-        _pmark(f"graph b{batch_id}: label delta write")
         _idx_fut.result()
         _idx_pool.shutdown(wait=True)
-        _pmark(f"graph b{batch_id}: index write joined")
         if deletes is not None:
             _write_fenced(
                 deletes.withColumn("__batch_id", F.lit(batch_id)),
@@ -1000,9 +967,7 @@ def dedup_graph_maintenance(
         # whether or not the fold already happened.
         if compact_every and batch_id % compact_every == compact_every - 1:
             compact_labels(spark, labels_path, keep_last=1)
-            _pmark(f"graph b{batch_id}: compact_labels")
             compact_index(spark, index_path, tomb_path, keep_last=1)
-            _pmark(f"graph b{batch_id}: compact_index")
 
     return apply
 
