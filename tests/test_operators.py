@@ -1741,18 +1741,16 @@ def test_lm_bigram_kernel_matches_string_reference(spark):
 
 def test_gate_kernel_matches_builder_chain(spark):
     """gate_feature_counts + gate_features_from_counts reproduce the
-    with_quality → with_lang_guess → with_repetition →
-    with_classifier_score chain BIT-for-bit on every non-NULL-text row
-    (exact double equality — same integers, same expression trees), and
-    the NULL-text row both paths drop once the _gate_stack gate filters
-    run (the kernel omits it; the chain scores it below every gate)."""
+    with_quality → with_lang_guess → with_repetition chain BIT-for-bit
+    on every non-NULL-text row (exact double equality — same integers,
+    same expression trees), and the NULL-text row both paths drop once
+    the _gate_stack gate filters run (the kernel omits it; the chain scores it below every gate)."""
     import random
 
     from wikidatabots_spark.operators.textstats import (
         _words_sql,
         gate_feature_counts,
         gate_features_from_counts,
-        with_classifier_score,
         with_lang_guess,
         with_quality,
         with_repetition,
@@ -1775,14 +1773,11 @@ def test_gate_kernel_matches_builder_chain(spark):
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
     cols = [
         "doc_id", "source", "lang_guess", "quality",
-        "type_token_ratio", "dup_2gram_frac", "cls_score",
+        "type_token_ratio", "dup_2gram_frac",
     ]
     dw = df.withColumn("__w", F.expr(_words_sql("text")))
-    chain = with_classifier_score(
-        with_repetition(
-            with_lang_guess(with_quality(dw, words_col="__w"), words_col="__w"),
-            words_col="__w",
-        ),
+    chain = with_repetition(
+        with_lang_guess(with_quality(dw, words_col="__w"), words_col="__w"),
         words_col="__w",
     ).select(*cols)
     fused = gate_features_from_counts(gate_feature_counts(df)).select(*cols)

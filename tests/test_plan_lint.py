@@ -319,3 +319,29 @@ def test_lint_keeps_ledger_aggregate_as_fence(spark, sf_dir):
         rn="rn",
     )
     assert _global_window_offences(out) == []
+
+
+def test_publish_dir_swap_called_only_from_compaction():
+    """The store protocol lives in one module: every store rewrite goes
+    through ``sinks.compaction.rewrite_store``, so ``publish_dir_swap``
+    is called from ``sinks/compaction.py`` and nowhere else in the
+    package (a second staged-dir → swap copy is how the unsafe
+    two-rename swap survived in the upsert sink)."""
+    import ast
+    from pathlib import Path
+
+    import wikidatabots_spark
+
+    root = Path(wikidatabots_spark.__file__).parent
+    callers = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(
+                fn, "id", None
+            )
+            if name == "publish_dir_swap":
+                callers.add(path.relative_to(root).as_posix())
+    assert callers == {"sinks/compaction.py"}

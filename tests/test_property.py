@@ -663,8 +663,8 @@ def test_dedup_graph_maintenance_random_batches_match_recompute(
             # and the band index + tombstones (r12 — the index fold
             # materializes ordered tombstone suppression, so landing it
             # right after the deletion batch is the adversarial case)
-            compact_labels(spark, labels_path, keep_last=1)
-            compact_index(spark, index_path, keep_last=1)
+            compact_labels(spark, labels_path)
+            compact_index(spark, index_path)
 
     for b in (0, 1):
         rows = [(i, t, "insert") for i, t, bb in docs if bb == b]

@@ -21,18 +21,28 @@ def _drain_and_stop(q, timeout_s: float = 120.0) -> None:
     — and then LEAKED the still-running query into every later test of
     the session-scoped SparkSession. The parity data is complete as
     soon as a completed batch reports zero input rows after the input
-    batches; wait for that, then stop."""
+    batches; wait for that, then stop.
+
+    Each poll re-raises a failed query's own exception (instead of
+    spinning to the deadline) and scans every retained progress
+    report, so a data batch followed quickly by an empty one between
+    two polls is not missed."""
     import time as _time
 
     deadline = _time.time() + timeout_s
     seen_data = False
     while _time.time() < deadline:
-        p = q.lastProgress
-        if p is not None:
+        if q.exception() is not None:
+            raise q.exception()
+        data = drained = False
+        for p in q.recentProgress:
             if p["numInputRows"] > 0:
-                seen_data = True
-            elif seen_data:
-                break
+                data = True
+            elif data:
+                drained = True
+        seen_data = seen_data or data
+        if drained:
+            break
         _time.sleep(0.2)
     assert seen_data, "stream never processed any input"
     q.stop()

@@ -14,6 +14,15 @@ from wikidatabots_spark.streaming.events_stream import (
 )
 
 
+@pytest.fixture
+def gate_pool():
+    """The thread pool ``decontamination_gate`` runs its store writes on."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        yield pool
+
+
 def _run_to_memory(sdf, name: str):
     q = (
         sdf.writeStream.format("memory")
@@ -1087,7 +1096,7 @@ def test_compact_labels_preserves_view_and_bounds_partitions(spark, tmp_path):
         [d for d in _os.listdir(labels_path) if d.startswith("__batch_id=")]
     )
     assert n_parts() == 4
-    removed = compact_labels(spark, labels_path, keep_last=1)
+    removed = compact_labels(spark, labels_path)
     assert removed == 2 and n_parts() == 2
     after = {
         (r.node, r.component)
@@ -1202,7 +1211,7 @@ def test_compact_labels_crash_at_every_step_preserves_view(
         monkeypatch.setattr(_shutil, "rmtree", counted(real_rmtree))
         crashed = False
         try:
-            compact_labels(spark, lbl, keep_last=1)
+            compact_labels(spark, lbl)
         except Crash:
             crashed = True
         finally:
@@ -1214,7 +1223,7 @@ def test_compact_labels_crash_at_every_step_preserves_view(
         assert view(lbl, idx) == want_view, f"view torn at crash point {k}"
         # recovery: compaction re-runs to completion and still serves
         # the same view with bounded partitions
-        compact_labels(spark, lbl, keep_last=1)
+        compact_labels(spark, lbl)
         assert view(lbl, idx) == want_view
         n_parts = len(
             [
@@ -1284,7 +1293,9 @@ def test_compact_rollup_state_preserves_merged_view(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_ingest_pipeline_composed_replay_idempotent(spark, sf_dir, tmp_path):
+def test_ingest_pipeline_composed_replay_idempotent(
+    spark, sf_dir, tmp_path, gate_pool
+):
     """The composed ingest path (decontamination gate → dedup-graph
     maintenance → DSIR model maintenance, one stream feeding three
     state stores) is replay-idempotent AS A WHOLE: re-invoking a batch
@@ -1311,13 +1322,13 @@ def test_ingest_pipeline_composed_replay_idempotent(spark, sf_dir, tmp_path):
     index_path = str(tmp_path / "idx")
     labels_path = str(tmp_path / "lbl")
     partials_path = str(tmp_path / "dsir")
-    gate = decontamination_gate(bench, flagged_path, n=5)
+    gate = decontamination_gate(bench, flagged_path, n=5, pool=gate_pool)
     graph = dedup_graph_maintenance(index_path, labels_path)
     dsir = dsir_model_maintenance(partials_path)
 
     def run_batch(i):
         b = train.where(F.col("doc_id") % 2 == i)
-        gate(b, i)
+        gate(b, i)[1].result()
         admitted = b.join(
             flagged_documents(spark, flagged_path).select(
                 F.col("train_id").alias("doc_id")
@@ -1505,7 +1516,9 @@ def test_dedup_graph_auto_compaction_bounds_partitions(spark, tmp_path):
     assert got == _full_recompute(_docs(spark, *all_rows))
 
 
-def test_decontamination_gate_matches_batch_sweep(spark, sf_dir, tmp_path):
+def test_decontamination_gate_matches_batch_sweep(
+    spark, sf_dir, tmp_path, gate_pool
+):
     """In-flight decontamination parity: training docs streamed as 3
     micro-batches through the gate produce, in union, EXACTLY the batch
     ngram_collisions over the full training corpus vs the same static
@@ -1523,10 +1536,10 @@ def test_decontamination_gate_matches_batch_sweep(spark, sf_dir, tmp_path):
     bench = d.where(F.col("doc_id") % 7 == 0)
     train = d.where(F.col("doc_id") % 7 != 0)
     flagged_path = str(tmp_path / "flagged")
-    gate = decontamination_gate(bench, flagged_path, n=5)
+    gate = decontamination_gate(bench, flagged_path, n=5, pool=gate_pool)
     parts = [train.where(F.col("doc_id") % 3 == i) for i in range(3)]
     for i, p in enumerate(parts):
-        gate(p, i)
+        gate(p, i)[1].result()
 
     def view():
         return {
@@ -1541,7 +1554,7 @@ def test_decontamination_gate_matches_batch_sweep(spark, sf_dir, tmp_path):
     }
     assert got == want and len(want) > 0
 
-    gate(parts[1], 1)  # replay
+    gate(parts[1], 1)[1].result()  # replay
     assert view() == got
 
 
@@ -1565,7 +1578,7 @@ def test_lazy_latest_labels_survives_compaction_publish(spark, tmp_path):
     apply(_docs(spark, (12, "C"), (13, "C")), 2)
 
     stale = latest_labels(spark, labels_path)  # built pre-publish
-    assert compact_labels(spark, labels_path, keep_last=1) == 1
+    assert compact_labels(spark, labels_path) == 1
     got = {(r.node, r.component) for r in stale.collect()}
     fresh = {
         (r.node, r.component)
@@ -1617,7 +1630,7 @@ def test_compact_index_preserves_probe_candidates(spark, tmp_path):
     assert any(r[0] == 1 for r in want)  # the re-insert is visible
     assert not any(r[0] == 10 for r in want)  # the delete holds
 
-    n_folded = compact_index(spark, index_path, tomb_path, keep_last=1)
+    n_folded = compact_index(spark, index_path)
     assert n_folded >= 1
     assert served() == want
     # history is bounded: base (batch 2) + the kept newest partition
@@ -1737,7 +1750,7 @@ def test_compact_index_crash_at_every_step_preserves_view(
         monkeypatch.setattr(_shutil, "rmtree", counted(real_rmtree))
         crashed = False
         try:
-            compact_index(spark, idx, idx + "_tombstones", keep_last=1)
+            compact_index(spark, idx)
         except Crash:
             crashed = True
         finally:
@@ -1747,7 +1760,7 @@ def test_compact_index_crash_at_every_step_preserves_view(
 
         assert view(lbl, idx) == want_view, f"view torn at crash point {k}"
         # recovery completes the fold and bounds history
-        compact_index(spark, idx, idx + "_tombstones", keep_last=1)
+        compact_index(spark, idx)
         assert view(lbl, idx) == want_view
         assert _store_batch_ids(idx) == [2, 3]
         assert _store_batch_ids(idx + "_tombstones") == []
@@ -1848,7 +1861,7 @@ def test_compact_dsir_partials_preserves_model(spark, sf_dir, tmp_path):
         }
 
     want = model()
-    n_folded = compact_dsir_partials(spark, partials_path, keep_last=1)
+    n_folded = compact_dsir_partials(spark, partials_path)
     assert n_folded == 1  # batches 0,1 -> base at 1; batch 2 kept
     assert model() == want
     parts = [
@@ -1898,7 +1911,9 @@ def test_dsir_maintenance_compact_every_bounds_partitions(
     assert got == {r.bucket: r.lr_ppm for r in batch_model.collect()}
 
 
-def test_compact_flagged_preserves_view(spark, sf_dir, tmp_path):
+def test_compact_flagged_preserves_view(
+    spark, sf_dir, tmp_path, gate_pool
+):
     """Flagged-store retention fold: the served decontamination
     verdicts are identical after folding old batch partitions, and the
     partition count is bounded."""
@@ -1917,9 +1932,9 @@ def test_compact_flagged_preserves_view(spark, sf_dir, tmp_path):
     bench = d.where(F.col("doc_id") % 7 == 0)
     train = d.where(F.col("doc_id") % 7 != 0)
     flagged_path = str(tmp_path / "flagged")
-    gate = decontamination_gate(bench, flagged_path, n=5)
+    gate = decontamination_gate(bench, flagged_path, n=5, pool=gate_pool)
     for i in range(3):
-        gate(train.where(F.col("doc_id") % 3 == i), i)
+        gate(train.where(F.col("doc_id") % 3 == i), i)[1].result()
 
     def view():
         return {
@@ -1929,7 +1944,7 @@ def test_compact_flagged_preserves_view(spark, sf_dir, tmp_path):
 
     want = view()
     assert want  # the gate actually flagged something at this SF
-    assert compact_flagged(spark, flagged_path, keep_last=1) == 1
+    assert compact_flagged(spark, flagged_path) == 1
     assert view() == want
     parts = [
         p for p in _os.listdir(flagged_path) if p.startswith("__batch_id=")

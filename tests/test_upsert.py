@@ -50,6 +50,92 @@ def test_upsert_parquet_roundtrip_and_atomic_dir(spark, tmp_path):
     assert not os.path.isdir(table + ".old")  # swap cleaned up
 
 
+def test_upsert_parquet_crash_at_every_step_keeps_table(
+    spark, tmp_path, monkeypatch
+):
+    """Fault injection over the upsert publish: kill upsert_parquet at
+    EVERY filesystem mutation (renames, the pointer symlink, removals).
+    At every crash point the table must read as the complete old rows
+    or the complete new rows — never missing, never a mix — and a
+    re-run of the same upsert must complete to the new rows."""
+    import shutil
+
+    proto = tmp_path / "proto"
+    proto.mkdir()
+    upsert_parquet(
+        spark,
+        str(proto / "t"),
+        spark.createDataFrame([(1, "a", 1), (2, "b", 1)], SCHEMA),
+        "id",
+        "version",
+    )
+    upsert_parquet(
+        spark,
+        str(proto / "t"),
+        spark.createDataFrame([(3, "c", 1)], SCHEMA),
+        "id",
+        "version",
+    )
+    old_rows = [(1, "a", 1), (2, "b", 1), (3, "c", 1)]
+    changes = spark.createDataFrame(
+        [(1, "a9", 2, False), (2, "b", 2, True), (5, "e", 1, False)],
+        SCHEMA + ", _deleted boolean",
+    )
+    new_rows = [(1, "a9", 2), (3, "c", 1), (5, "e", 1)]
+
+    def rows(table):
+        assert os.path.isdir(table), "table missing"
+        return sorted(map(tuple, spark.read.parquet(table).collect()))
+
+    assert rows(str(proto / "t")) == old_rows
+
+    class Crash(RuntimeError):
+        pass
+
+    real_rename, real_symlink, real_rmtree = (
+        os.rename,
+        os.symlink,
+        shutil.rmtree,
+    )
+    k = 0
+    while True:
+        case = tmp_path / f"case{k}"
+        shutil.copytree(proto, case, symlinks=True)
+        table = str(case / "t")
+        budget = [k]
+
+        def counted(fn):
+            def w(*a, **kw):
+                if budget[0] <= 0:
+                    raise Crash(f"injected fault at op budget {k}")
+                budget[0] -= 1
+                return fn(*a, **kw)
+
+            return w
+
+        monkeypatch.setattr(os, "rename", counted(real_rename))
+        monkeypatch.setattr(os, "symlink", counted(real_symlink))
+        monkeypatch.setattr(shutil, "rmtree", counted(real_rmtree))
+        crashed = False
+        try:
+            upsert_parquet(spark, table, changes, "id", "version")
+        except Crash:
+            crashed = True
+        finally:
+            monkeypatch.setattr(os, "rename", real_rename)
+            monkeypatch.setattr(os, "symlink", real_symlink)
+            monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+
+        assert rows(table) in (old_rows, new_rows), f"torn at crash {k}"
+        # recovery: the re-run completes and publishes the new rows
+        upsert_parquet(spark, table, changes, "id", "version")
+        assert rows(table) == new_rows
+        if not crashed:
+            break  # budget exceeded the protocol's op count: clean run
+        k += 1
+    assert k >= 3  # the publish really has multiple distinct fault points
+
+
 def test_merge_single_shuffle_plan(spark):
     """The merge is one row_number window keyed on the merge key: one
     exchange, no join."""

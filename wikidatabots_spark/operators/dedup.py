@@ -313,10 +313,13 @@ def minhash_signature_cols(
 
         ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")  # Java regex \s
         prefixes = [f"{i}:".encode("utf-8") for i in range(k)]
-        # per-task shingle→k-digest memo, capped at 2^19 entries (~150 MB
-        # worst case at 8 hashes): shingles repeat across documents
-        # (Zipf), so most lookups hit; past the cap the kernel simply
-        # hashes — same values, bounded memory for a long-lived task
+        # per-task shingle→k-digest memo, capped at 2^19 entries: at 8
+        # hashes an entry is ~0.9 KB (eight 81-byte hex strs, the tuple,
+        # the shingle key, its dict slot), so ~450-500 MB worst case per
+        # Python worker, one worker per task slot. Shingles repeat
+        # across documents (Zipf), so most lookups hit; past the cap the
+        # kernel simply hashes — same values, bounded memory for a
+        # long-lived task
         memo: dict[str, tuple[str, ...]] = {}
 
         def digests(sh: str) -> tuple[str, ...]:

@@ -256,35 +256,33 @@ def gate_feature_counts(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    keep_cols: tuple[str, ...] = ("source",),
 ) -> DataFrame:
     """ALL integer counters of the curate gate stack in ONE
     ``mapInArrow`` pass — the r14 fusion of the per-word work in
-    ``with_quality`` + ``with_lang_guess`` + ``with_repetition`` +
-    ``with_classifier_score`` (guide §4.2): the IN-list marker filters
-    (10 stopwords + 4×5 language markers per word), the 2/3-gram
-    concat+distinct builds, and the per-token md5 classifier weight all
+    ``with_quality`` + ``with_lang_guess`` + ``with_repetition``
+    (guide §4.2): the IN-list marker filters (10 stopwords + 4×5
+    language markers per word) and the 2/3-gram concat+distinct builds
     ran as interpreted HOF lambdas (no codegen inside lambdas) — the
     dominant CPU of every curate flagship after the shared-tokenization
-    fix. The kernel computes per document, from one tokenize:
+    fix. The kernel carries ``id_col`` and ``source`` through and
+    computes per document, from one tokenize:
 
     n_words, n_chars, n_punct, n_stop, m_en/m_es/m_fr/m_de (marker
     occurrence counts), n_distinct, g2_tot/g2_distinct,
-    g3_tot/g3_distinct (word-2/3-gram totals and distincts), wsum (the
-    ``_token_weight`` integer sum).
+    g3_tot/g3_distinct (word-2/3-gram totals and distincts).
 
     Every output is an EXACT integer the expression form also derives
-    (md5 is engine-independent; sums/counts are order-free), so the
-    downstream doubles — assembled by :func:`gate_features_from_counts`
-    with the builders' own expression trees — are bit-identical, pinned
-    by ``test_gate_kernel_matches_builder_chain``. Tokenizer
+    (sums/counts are order-free), so the downstream doubles — assembled
+    by :func:`gate_features_from_counts` with the builders' own
+    expression trees — are bit-identical, pinned by
+    ``test_gate_kernel_matches_builder_chain``. Tokenizer
     equivalence notes as in ``winnow_fingerprints`` (Java ``\\s``
     split class; ASCII lowercasing; codepoint ``length``).
 
     Rows with NULL ``text_col`` are OMITTED. The builder chain instead
-    scores such a row ``quality 0.195 / lang 'und' / cls_score NULL``
-    (``size(NULL array)`` is -1 under the session's legacy setting), so
-    every gate in ``plans.quality._gate_stack`` filters it out and its
+    scores such a row ``quality 0.195 / lang 'und'`` (``size(NULL
+    array)`` is -1 under the session's legacy setting), so every gate in
+    ``plans.quality._gate_stack`` filters it out and its
     ``label`` is false-with-no-occurrence-rows — both paths contribute
     nothing, so dropping the row is output-equivalent for the gate
     consumers (not for arbitrary outer-join callers; this is a
@@ -299,18 +297,13 @@ def gate_feature_counts(
     from wikidatabots_spark.operators.dedup import ensure_parallelism
 
     src = ensure_parallelism(
-        df.select(
-            F.col(id_col), *[F.col(c) for c in keep_cols], F.col(text_col)
-        ),
-        id_col,
+        df.select(F.col(id_col), F.col("source"), F.col(text_col)), id_col
     )
-    n_keep = len(keep_cols)
     dtypes = dict(src.dtypes)
     counter_names = [
         "n_words", "n_chars", "n_punct", "n_stop",
         *[f"m_{lang}" for lang in LANG_MARKERS],
         "n_distinct", "g2_tot", "g2_distinct", "g3_tot", "g3_distinct",
-        "wsum",
     ]
     stop_set = frozenset(STOPWORDS)
     marker_sets = [frozenset(m) for m in LANG_MARKERS.values()]
@@ -319,30 +312,16 @@ def gate_feature_counts(
     def feature_batches(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
-        import hashlib
         import re
 
         ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")  # Java regex \s
-        wmemo: dict[str, int] = {}
-        half = (_CLS_RANGE - 1) // 2
-
-        def weight(w: str) -> int:
-            v = wmemo.get(w)
-            if v is None:
-                b = (
-                    int(hashlib.md5(w.encode("utf-8")).hexdigest()[:4], 16)
-                    % CLS_BUCKETS
-                )
-                v = (b * _CLS_MULT) % _CLS_RANGE - half
-                wmemo[w] = v
-            return v
 
         for batch in batches:
             ids = batch.column(0).to_pylist()
-            keeps = [batch.column(1 + j).to_pylist() for j in range(n_keep)]
-            texts = batch.column(1 + n_keep).to_pylist()
+            sources = batch.column(1).to_pylist()
+            texts = batch.column(2).to_pylist()
             out_ids: list = []
-            out_keeps: list[list] = [[] for _ in range(n_keep)]
+            out_sources: list = []
             cols: list[list[int]] = [[] for _ in counter_names]
             for row, s in enumerate(texts):
                 if s is None:
@@ -368,44 +347,37 @@ def gate_feature_counts(
                     len(set(g2)),
                     len(g3),
                     len(set(g3)),
-                    sum(weight(w) for w in wl),
                 )
                 out_ids.append(ids[row])
-                for j in range(n_keep):
-                    out_keeps[j].append(keeps[j][row])
+                out_sources.append(sources[row])
                 for c, v in zip(cols, vals):
                     c.append(v)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(out_ids, type=batch.schema.field(0).type),
-                    *[
-                        pa.array(
-                            out_keeps[j], type=batch.schema.field(1 + j).type
-                        )
-                        for j in range(n_keep)
-                    ],
+                    pa.array(out_sources, type=batch.schema.field(1).type),
                     *[pa.array(c, type=pa.int64()) for c in cols],
                 ],
-                names=[id_col, *keep_cols, *counter_names],
+                names=[id_col, "source", *counter_names],
             )
 
-    keep_schema = "".join(f"{c} {dtypes[c]}, " for c in keep_cols)
     counter_schema = ", ".join(f"{c} long" for c in counter_names)
     return src.mapInArrow(
         feature_batches,
-        f"{id_col} {dtypes[id_col]}, {keep_schema}{counter_schema}",
+        f"{id_col} {dtypes[id_col]}, source {dtypes['source']},"
+        f" {counter_schema}",
     )
 
 
 def gate_features_from_counts(cnts: DataFrame) -> DataFrame:
     """Assemble the gate-stack feature columns (``quality``,
     ``lang_guess``, ``type_token_ratio``, ``dup_2gram_frac``,
-    ``cls_score``) from :func:`gate_feature_counts` output with the
-    builders' OWN expression trees re-based on the counters — the
+    ``dup_3gram_frac``) from :func:`gate_feature_counts` output with
+    the builders' OWN expression trees re-based on the counters — the
     integers are identical, the double arithmetic is the same fixed
     tree, so every feature is bit-identical to the
-    ``with_quality``/``with_lang_guess``/``with_repetition``/
-    ``with_classifier_score`` chain (parity-pinned)."""
+    ``with_quality``/``with_lang_guess``/``with_repetition`` chain
+    (parity-pinned)."""
     stop_ratio = (
         "CASE WHEN n_words > 0 THEN"
         " CAST(n_stop AS DOUBLE) / n_words ELSE 0.0D END"
@@ -446,10 +418,6 @@ def gate_features_from_counts(cnts: DataFrame) -> DataFrame:
             ),
             "dup_3gram_frac": F.expr(
                 frac("g3_tot - g3_distinct", "g3_tot")
-            ),
-            "cls_score": F.expr(
-                "CASE WHEN n_words > 0 THEN CAST(wsum AS DOUBLE)"
-                " / CAST(n_words * 1000 AS DOUBLE) END"
             ),
         }
     )

@@ -3176,46 +3176,50 @@ def ingest_pipeline_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials_path = os.path.join(root, "dsir")
     from concurrent.futures import ThreadPoolExecutor
 
-    gate_pool = ThreadPoolExecutor(max_workers=1)
-    gate = decontamination_gate(
-        bench, flagged_path, n=5, compact_every=2, pool=gate_pool
-    )
-    graph = dedup_graph_maintenance(index_path, labels_path, compact_every=2)
-    dsir = dsir_model_maintenance(partials_path, compact_every=2)
+    # gate_pool runs the gate's prewarm and its verdict-store writes;
+    # the `with` joins and shuts it down once the stream has drained
+    with ThreadPoolExecutor(max_workers=1) as gate_pool:
+        gate = decontamination_gate(
+            bench, flagged_path, n=5, compact_every=2, pool=gate_pool
+        )
+        graph = dedup_graph_maintenance(
+            index_path, labels_path, compact_every=2
+        )
+        dsir = dsir_model_maintenance(partials_path, compact_every=2)
 
-    def ingest_sink(batch: DataFrame, batch_id: int) -> None:
-        b = pushdown_fence(batch)
-        # the gate returns its batch verdicts as an eager checkpoint and
-        # appends them to the store on gate_pool, overlapped with the
-        # admission + graph work below (guide §2.6); the future resolves
-        # before this sink returns so the engine's batch commit never
-        # precedes the verdict write (replay fence)
-        flags, gate_fut = gate(b, batch_id)
-        # admit only documents the gate did not flag (a doc's verdict
-        # depends only on its own text, so the returned batch verdicts
-        # are exactly the store partition this batch would re-read).
-        # EAGER checkpoint (not the lazy fence): both downstream sinks
-        # consume it from concurrent threads below, and a lazy fence
-        # would race two first-actions into double-computing it.
-        admitted = b.join(
-            flags.select(F.col("train_id").alias("doc_id")),
-            "doc_id",
-            "left_anti",
-        ).localCheckpoint(eager=True)
-        # the graph and DSIR stores are independent consumers of the
-        # admitted batch — overlap the short DSIR partial append with
-        # the long graph-maintenance path (guide §2.6)
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            dsir_fut = pool.submit(dsir, admitted, batch_id)
-            graph(admitted.select("doc_id", "text"), batch_id)
-            dsir_fut.result()
-        gate_fut.result()
+        def ingest_sink(batch: DataFrame, batch_id: int) -> None:
+            b = pushdown_fence(batch)
+            # the gate returns its batch verdicts as an eager checkpoint and
+            # appends them to the store on gate_pool, overlapped with the
+            # admission + graph work below (guide §2.6); the future resolves
+            # before this sink returns so the engine's batch commit never
+            # precedes the verdict write (replay fence)
+            flags, gate_fut = gate(b, batch_id)
+            # admit only documents the gate did not flag (a doc's verdict
+            # depends only on its own text, so the returned batch verdicts
+            # are exactly the store partition this batch would re-read).
+            # EAGER checkpoint (not the lazy fence): both downstream sinks
+            # consume it from concurrent threads below, and a lazy fence
+            # would race two first-actions into double-computing it.
+            admitted = b.join(
+                flags.select(F.col("train_id").alias("doc_id")),
+                "doc_id",
+                "left_anti",
+            ).localCheckpoint(eager=True)
+            # the graph and DSIR stores are independent consumers of the
+            # admitted batch — overlap the short DSIR partial append with
+            # the long graph-maintenance path (guide §2.6)
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                dsir_fut = pool.submit(dsir, admitted, batch_id)
+                graph(admitted.select("doc_id", "text"), batch_id)
+                dsir_fut.result()
+            gate_fut.result()
 
-    run_staged_foreach_batch(
-        [train.where(F.col("doc_id") % 3 == i) for i in range(3)],
-        ingest_sink,
-        root,
-    )
+        run_staged_foreach_batch(
+            [train.where(F.col("doc_id") % 3 == i) for i in range(3)],
+            ingest_sink,
+            root,
+        )
     flags = flagged_documents(spark, flagged_path).select(
         F.lit("flagged").alias("leg"),
         F.col("train_id").alias("doc_id"),

@@ -6,8 +6,12 @@ deliveries) accretes thousands of tiny parquet files; every subsequent
 scan then pays a task per file plus footer/open overhead — the classic
 operational tax at corpus scale (the same reason table formats ship
 OPTIMIZE). This utility rewrites a directory to ceil(total_bytes /
-target_bytes) files with an atomic directory swap (same publish
-protocol as ``sinks.upsert``).
+target_bytes) files with an atomic directory swap.
+
+This module owns the store protocol: ``rewrite_store`` (stage a frame
+in a sibling directory, publish it with ``publish_dir_swap``) is the
+one way any store in the package is rewritten — the upsert sink, the
+rollup and streaming state-store folds, and the compaction below.
 
 Ordering: pass ``order_by`` to lay rows out clustered (e.g. a z-order
 key from ``functions.scale.zorder_key``) — compaction is the natural
@@ -29,21 +33,20 @@ import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 # ---------------------------------------------------------------------------
 # Atomic directory publish (pointer swap)
 #
-# The r10 swap protocol renamed the live dir aside and the staged dir in
-# (two renames). ADVICE r10: between the two renames the store does not
-# exist — a concurrent reader throws and a crash strands the data at
-# `path + ".old"`, which then wedges the NEXT compaction's rename with
-# ENOTEMPTY. The fixed protocol keeps the table path as a SYMLINK to an
-# immutable sibling version directory (`path.v-<uuid>`): publishing is
-# one os.rename of a fresh symlink over the old one — atomic on POSIX,
-# so readers holding the path always resolve to a complete store and a
-# crash at ANY step leaves the previous version current (the staged
-# version dir is unreferenced garbage, swept by the next publish).
+# A two-rename swap (live dir aside, staged dir in) leaves the store
+# absent between the renames — a concurrent reader throws, and a crash
+# strands the data at `path + ".old"`. Instead the table path is a
+# SYMLINK to an immutable sibling version directory (`path.v-<seq>-
+# <uuid>`): publishing is one os.rename of a fresh symlink over the old
+# one — atomic on POSIX, so readers holding the path always resolve to
+# a complete store and a crash at ANY step leaves the previous version
+# current (the staged version dir is unreferenced garbage, swept by the
+# next publish).
 # Writers are oblivious: reads, appends, and Spark's dynamic partition
 # overwrite all resolve through the symlink. This is the local-FS
 # realization of the VersionedTable manifest-pointer pattern; on an
@@ -146,6 +149,24 @@ def publish_dir_swap(staged: str, path: str, keep_versions: int = 2) -> None:
         release_flock(fd, lock)
 
 
+def rewrite_store(
+    df: DataFrame, path: str, partition_by: tuple[str, ...] = ()
+) -> None:
+    """Replace the store at ``path`` with ``df``: write it into a staged
+    sibling directory (same filesystem, so the publish is a rename),
+    publish it with `publish_dir_swap`, and drop the staging dir. A
+    crash at any step leaves the previous store current. ``df`` may
+    read ``path`` itself (pinned via `resolve_store`): the write
+    completes before the pointer moves."""
+    tmp = tempfile.mkdtemp(
+        prefix="rewrite_", dir=os.path.dirname(os.path.abspath(path))
+    )
+    staged = os.path.join(tmp, "staged")
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(staged)
+    publish_dir_swap(staged, path)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
 def _max_seq(path: str) -> int:
     parent = os.path.dirname(os.path.abspath(path)) or "."
     base = os.path.basename(path)
@@ -210,11 +231,5 @@ def compact_parquet_dir(
         )
     else:
         df = df.coalesce(n_files)
-    tmp = tempfile.mkdtemp(
-        prefix="compact_", dir=os.path.dirname(os.path.abspath(table_dir))
-    )
-    staged = os.path.join(tmp, "staged")
-    df.write.mode("overwrite").parquet(staged)
-    publish_dir_swap(staged, table_dir)
-    shutil.rmtree(tmp, ignore_errors=True)
+    rewrite_store(df, table_dir)
     return sum(1 for f in os.listdir(table_dir) if f.endswith(".parquet"))

@@ -13,9 +13,11 @@ DataFrame program plus an atomic directory swap. Rules encoded here:
   ``_deleted = true`` tombstones its key. Absence of a key in the batch
   means "unchanged", never "delete" — the CDC convention that makes
   partial batches safe.
-- **Atomic publish**: the merged table is written to a temp directory
-  and renamed over the target, so a reader never observes a half-merged
-  table (rename is atomic per directory on POSIX and on HDFS).
+- **Atomic publish**: the merged table is published with
+  ``sinks.compaction.rewrite_store`` — staged beside the table, then
+  one atomic retarget of the table's symlink pointer — so a reader, or
+  a crash at any step, sees the old table or the new one, never a
+  half-merged or missing table.
 
 Scale shape: the merge is ONE shuffle keyed on the merge key (union →
 row_number window). The rewrite cost is the real constraint at 100 TB —
@@ -31,11 +33,11 @@ north-star extension).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from wikidatabots_spark.sinks.compaction import resolve_store, rewrite_store
 
 DELETED_COL = "_deleted"
 
@@ -84,31 +86,15 @@ def upsert_parquet(
     key: str,
     version_col: str,
 ) -> None:
-    """Apply ``changes`` to the parquet table at ``table_dir`` with an
-    atomic directory swap; creates the table if absent."""
+    """Apply ``changes`` to the parquet table at ``table_dir`` and
+    publish the result with ``rewrite_store``; creates the table if
+    absent."""
     if os.path.isdir(table_dir) and any(
         f.endswith(".parquet") for f in os.listdir(table_dir)
     ):
-        current = spark.read.parquet(table_dir)
-        merged = merge_upsert(current, changes, key, version_col)
+        current = spark.read.parquet(resolve_store(table_dir))
     else:
-        merged = merge_upsert(
-            changes.limit(0).drop(*(
-                [DELETED_COL] if DELETED_COL in changes.columns else []
-            )),
-            changes,
-            key,
-            version_col,
+        current = changes.limit(0).drop(
+            *([DELETED_COL] if DELETED_COL in changes.columns else [])
         )
-    tmp = tempfile.mkdtemp(
-        prefix="upsert_", dir=os.path.dirname(os.path.abspath(table_dir))
-    )
-    staged = os.path.join(tmp, "staged")
-    merged.write.mode("overwrite").parquet(staged)
-    old = table_dir + ".old" if os.path.isdir(table_dir) else None
-    if old:
-        os.rename(table_dir, old)
-    os.rename(staged, table_dir)
-    if old:
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
+    rewrite_store(merge_upsert(current, changes, key, version_col), table_dir)

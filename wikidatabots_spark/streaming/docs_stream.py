@@ -19,11 +19,16 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wikidatabots_spark.sinks.compaction import resolve_store
+from wikidatabots_spark.sinks.compaction import (
+    ensure_linked_store,
+    resolve_store,
+    rewrite_store,
+)
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -181,6 +186,16 @@ def _band_pfx():
     return F.substring("band_hash", 1, _BAND_PFX_LEN)
 
 
+# Optional column of a dedup-graph batch: rows with "delete" are
+# deletions, everything else (NULL included) an insert.
+_OP_COL = "__op"
+
+
+def _tomb_path(index_path: str) -> str:
+    """The tombstone store that sits beside a band index."""
+    return index_path.rstrip("/") + "_tombstones"
+
+
 # Explicit store schemas for the per-batch reads (r14 optimization,
 # guide §6/§7.3): ``spark.read.parquet`` without a schema reads parquet
 # footers to infer one on the DRIVER on every invocation — the graph
@@ -215,6 +230,91 @@ def _has_parquet(path: str) -> bool:
         if any(f.endswith(".parquet") for f in files):
             return True
     return False
+
+
+def _store_batch_ids(path: str) -> list[int]:
+    """Distinct ``__batch_id`` partition values anywhere in a (possibly
+    nested-partitioned) store — the band index nests them under
+    ``band_pfx=…`` directories, so a flat listdir is not enough."""
+    ids: set[int] = set()
+    for _root, dirs, _files in os.walk(path):
+        for d in dirs:
+            if d.startswith("__batch_id="):
+                ids.add(int(d.split("=", 1)[1]))
+    return sorted(ids)
+
+
+def _write_fenced(
+    df: DataFrame, path: str, batch_id: int, spread: str, *outer: str
+) -> None:
+    """Write one micro-batch's rows into a state store under the replay
+    fence: the rows are stamped ``__batch_id = batch_id``, partitioned
+    by ``(*outer, __batch_id)`` and written with DYNAMIC partition
+    overwrite, so a re-run of the same batch id replaces exactly its
+    own partitions (byte-for-byte idempotent) and never touches another
+    batch's. The store lives behind a symlink pointer from birth
+    (``ensure_linked_store``), so every later fold publishes with ONE
+    atomic rename.
+
+    The rows are repartitioned on the partition columns plus the
+    high-cardinality ``spread`` column before the write: without it
+    EVERY write task holding rows for a partition value emits its own
+    file there (measured 512 files per batch — 32 tasks × 16 band
+    prefixes — for a ~3k-row index delta), and every later probe or
+    fold pays the per-file listing+open cost. No partition count is
+    given, so AQE sizes the exchange: a tiny delta lands as one file
+    per touched partition dir, a huge one proportionally."""
+    part_cols = [*outer, "__batch_id"]
+    ensure_linked_store(path)
+    (
+        df.withColumn("__batch_id", F.lit(batch_id))
+        .repartition(*[F.col(c) for c in part_cols], F.col(spread))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*part_cols)
+        .parquet(path)
+    )
+
+
+def _fold_batches(
+    spark: SparkSession,
+    path: str,
+    merge: Callable[[DataFrame], DataFrame],
+    spread: str,
+) -> int:
+    """Retention fold shared by the flat ``__batch_id``-partitioned
+    stores: every partition except the newest is replaced by ONE base
+    partition at the highest folded batch id, holding ``merge`` of the
+    folded rows (``merge`` maps the folded rows, ``__batch_id``
+    included, to the store's data columns). Returns the number of
+    partitions folded away.
+
+    The newest partition stays un-folded for the replay fence: a
+    replayed micro-batch overwrites exactly its own partition, which
+    must not be the base — folding the newest batch into the base would
+    let its replay REPLACE the folded history. Fewer than three
+    partitions is a listing-only no-op (no Spark read). Published with
+    ``rewrite_store``, laid out as ``_write_fenced`` writes."""
+    ids = _store_batch_ids(path)
+    if len(ids) <= 2:
+        return 0
+    base_id = ids[-2]
+    raw = spark.read.parquet(resolve_store(path))
+    # the base keeps the store's exact physical __batch_id type so
+    # repeated folds stay schema-stable across mixed-file scans
+    bid_t = raw.schema["__batch_id"].dataType
+    base = merge(raw.where(F.col("__batch_id") <= F.lit(base_id))).withColumn(
+        "__batch_id", F.lit(base_id).cast(bid_t)
+    )
+    kept = raw.where(F.col("__batch_id") > F.lit(base_id))
+    rewrite_store(
+        base.unionByName(kept.select(*base.columns)).repartition(
+            F.col("__batch_id"), F.col(spread)
+        ),
+        path,
+        ("__batch_id",),
+    )
+    return len(ids) - 2
 
 
 def read_band_index(
@@ -336,96 +436,36 @@ def dsir_model_maintenance(partials_path: str, compact_every: int | None = None)
         dsir_class_counts,
         dsir_occurrences,
     )
-    from wikidatabots_spark.sinks.compaction import ensure_linked_store
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         batch_id = int(batch_id)
-        ensure_linked_store(partials_path)
         cls = dsir_class_counts(
             dsir_occurrences(batch.select("doc_id", "source", "text"))
         )
-        (
-            # repartition before the partitioned write (r13): without it
-            # every shuffle task emits its own file into the batch dir
-            # (32 files for a ~1k-row counter delta); AQE sizes the
-            # exchange, so the tiny delta lands as one file
-            cls.withColumn("__batch_id", F.lit(batch_id))
-            .repartition(F.col("__batch_id"), F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(partials_path)
-        )
+        _write_fenced(cls, partials_path, batch_id, "bucket")
         if compact_every and batch_id % compact_every == compact_every - 1:
             compact_dsir_partials(batch.sparkSession, partials_path)
 
     return apply
 
 
-def compact_dsir_partials(
-    spark: SparkSession, partials_path: str, keep_last: int = 1
-) -> int:
+def compact_dsir_partials(spark: SparkSession, partials_path: str) -> int:
     """Retention compaction for the DSIR class-count partials store
-    (VERDICT r11 next #6): fold every ``__batch_id`` partition except
-    the newest ``keep_last`` into ONE base partition holding the
-    per-bucket SUM of the folded counters — exact by the counters'
-    defining additivity, so ``merged_dsir_model`` is bit-identical
-    before and after (test-pinned; the model formula sees the same
-    integer totals). Returns the number of partitions folded away.
+    (VERDICT r11 next #6): ``_fold_batches`` with a per-bucket SUM of
+    the folded counters — exact by the counters' defining additivity,
+    so ``merged_dsir_model`` is bit-identical before and after
+    (test-pinned; the model formula sees the same integer totals).
+    Returns the number of partitions folded away."""
 
-    The newest ``keep_last`` partitions stay un-folded for the replay
-    fence: a replayed micro-batch overwrites exactly its own partition
-    (dynamic partition overwrite), which must not be the base — folding
-    the newest batch into the base would let its replay REPLACE the
-    folded history. Published via ``publish_dir_swap`` (atomic pointer
-    retarget; crash at any step leaves the previous store current)."""
-    import shutil
-    import tempfile
-
-    from wikidatabots_spark.sinks.compaction import publish_dir_swap
-
-    part_ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(partials_path)
-        if d.startswith("__batch_id=")
-    )
-    fold = part_ids[:-keep_last] if keep_last > 0 else part_ids
-    if len(fold) <= 1:
-        return 0
-    base_id = fold[-1]
-    raw = spark.read.parquet(resolve_store(partials_path))
-    bid_t = raw.schema["__batch_id"].dataType
-    # keep the counters' exact physical types so repeated compaction is
-    # schema-stable across mixed-file scans
-    ct_t = raw.schema["c_t"].dataType
-    cr_t = raw.schema["c_r"].dataType
-    base = (
-        raw.where(F.col("__batch_id") <= F.lit(base_id))
-        .groupBy("bucket")
-        .agg(
-            F.sum("c_t").cast(ct_t).alias("c_t"),
-            F.sum("c_r").cast(cr_t).alias("c_r"),
+    def merge(rows: DataFrame) -> DataFrame:
+        # keep the counters' exact physical types so repeated compaction
+        # is schema-stable across mixed-file scans
+        return rows.groupBy("bucket").agg(
+            F.sum("c_t").cast(rows.schema["c_t"].dataType).alias("c_t"),
+            F.sum("c_r").cast(rows.schema["c_r"].dataType).alias("c_r"),
         )
-        .withColumn("__batch_id", F.lit(base_id).cast(bid_t))
-    )
-    kept = raw.where(F.col("__batch_id") > F.lit(base_id)).select(
-        "bucket", "c_t", "c_r", "__batch_id"
-    )
-    tmp = tempfile.mkdtemp(
-        prefix="dsir_compact_",
-        dir=os.path.dirname(os.path.abspath(partials_path)),
-    )
-    staged = os.path.join(tmp, "data")
-    (
-        base.unionByName(kept)
-        .repartition(F.col("__batch_id"), F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("__batch_id")
-        .parquet(staged)
-    )
-    publish_dir_swap(staged, partials_path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return len(fold) - 1
+
+    return _fold_batches(spark, partials_path, merge, "bucket")
 
 
 def merged_dsir_model(spark: SparkSession, partials_path: str) -> DataFrame:
@@ -449,7 +489,8 @@ def decontamination_gate(
     flagged_path: str,
     n: int = 5,
     compact_every: int | None = None,
-    pool=None,
+    *,
+    pool,
 ):
     """foreachBatch sink flagging arriving documents that share any
     word n-gram with a STATIC benchmark/eval set BEFORE they land —
@@ -464,10 +505,17 @@ def decontamination_gate(
     IS the full-corpus decontamination — parity-tested against the
     batch operator over the same documents.
 
-    Replay fence: flagged rows are partitioned by ``__batch_id`` and
-    written with dynamic partition overwrite (the
-    ``dedup_graph_maintenance`` rule), so at-least-once replays are
-    no-ops.
+    ``apply(batch, batch_id)`` returns ``(flags, write_future)``: the
+    batch verdicts as an eager checkpoint, handed BACK so the caller's
+    admission anti-join consumes them in-memory instead of re-reading
+    the store partition just written, and the future of the store
+    write (+ its retention fold), which runs on ``pool`` overlapped
+    with the caller's downstream batch work (guide §2.6). The caller
+    must resolve the future before its sink returns: the engine's
+    batch commit may not precede the store write.
+
+    Replay fence: flagged rows are written by ``_write_fenced``, so
+    at-least-once replays are no-ops.
 
     Scale: per batch, batch-sized gram reduction + one broadcast join
     against the (eval-set-sized, tiny by definition) benchmark grams;
@@ -479,107 +527,39 @@ def decontamination_gate(
         ngram_collisions,
     )
 
-    from wikidatabots_spark.sinks.compaction import ensure_linked_store
-
     bg = pushdown_fence(gram_table(bench, n, out_id="bench_id"))
     # Prewarm (r14 optimization, guide §2.6): the fenced benchmark gram
-    # table's first action used to run INSIDE batch 0's probe — pure
-    # critical-path time. With a pool, its materialization is kicked off
-    # at gate construction on that pool, overlapped with whatever the
-    # caller does before the first trigger (the seated queries stage
-    # their drop-zone files and start the stream meanwhile). The first
-    # probe WAITS on the future rather than racing it: two concurrent
-    # first-actions on a lazy localCheckpoint would double-compute it.
-    prewarm = [pool.submit(lambda: bg.count())] if pool is not None else []
+    # table's first action is kicked off at gate construction on the
+    # pool, overlapped with whatever the caller does before the first
+    # trigger (the seated queries stage their drop-zone files and start
+    # the stream meanwhile). The first probe WAITS on the future rather
+    # than racing it: two concurrent first-actions on a lazy
+    # localCheckpoint would double-compute it.
+    prewarm = [pool.submit(lambda: bg.count())]
 
-    def _write(flagged: DataFrame, batch_id: int) -> None:
-        (
-            # repartition before the partitioned write (r13): bounds the
-            # verdict delta to AQE-sized files instead of one per task
-            flagged.withColumn("__batch_id", F.lit(batch_id))
-            .repartition(F.col("__batch_id"), F.col("train_id"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(flagged_path)
-        )
+    def _write(flags: DataFrame, batch_id: int) -> None:
+        _write_fenced(flags, flagged_path, batch_id, "train_id")
         if compact_every and batch_id % compact_every == compact_every - 1:
-            compact_flagged(flagged.sparkSession, flagged_path)
+            compact_flagged(flags.sparkSession, flagged_path)
 
     def apply(batch: DataFrame, batch_id: int):
         batch_id = int(batch_id)
         if prewarm:
             prewarm.pop().result()
-        ensure_linked_store(flagged_path)
-        flagged = ngram_collisions(batch, None, n=n, bench_grams=bg)
-        if pool is None:
-            _write(flagged, batch_id)
-            return flagged
-        # composed-sink form (guide §2.6): the verdicts are computed
-        # once into an eager checkpoint and handed BACK to the caller —
-        # the admission anti-join consumes them in-memory instead of
-        # re-reading the store partition it just wrote — while the
-        # store append (+ its retention fold) runs on the caller's
-        # thread pool, overlapped with downstream batch work. The
-        # caller must resolve the returned future before its sink
-        # returns: the engine's batch commit may not precede the store
-        # write (the replay fence).
-        flags = flagged.localCheckpoint(eager=True)
+        flags = ngram_collisions(batch, None, n=n, bench_grams=bg)
+        flags = flags.localCheckpoint(eager=True)
         return flags, pool.submit(_write, flags, batch_id)
 
     return apply
 
 
-def compact_flagged(
-    spark: SparkSession, flagged_path: str, keep_last: int = 1
-) -> int:
-    """Retention fold for the decontamination-verdict store: rewrite
-    every ``__batch_id`` partition except the newest ``keep_last`` into
-    one base partition (a plain re-partition — verdict rows are
+def compact_flagged(spark: SparkSession, flagged_path: str) -> int:
+    """Retention fold for the decontamination-verdict store:
+    ``_fold_batches`` with the identity merge — verdict rows are
     append-only facts keyed by a document that arrives once, so there
     is no merge/suppression semantics to materialize; the fold only
-    bounds the partition/file count the serving union scans). The
-    newest partitions stay un-folded so a replayed batch's dynamic
-    partition overwrite targets its own partition, never the base.
-    Published atomically via ``publish_dir_swap``."""
-    import shutil
-    import tempfile
-
-    from wikidatabots_spark.sinks.compaction import publish_dir_swap
-
-    part_ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(flagged_path)
-        if d.startswith("__batch_id=")
-    )
-    fold = part_ids[:-keep_last] if keep_last > 0 else part_ids
-    if len(fold) <= 1:
-        return 0
-    base_id = fold[-1]
-    raw = spark.read.parquet(resolve_store(flagged_path))
-    bid_t = raw.schema["__batch_id"].dataType
-    data_cols = [c for c in raw.columns if c != "__batch_id"]
-    base = raw.where(F.col("__batch_id") <= F.lit(base_id)).select(
-        *data_cols
-    ).withColumn("__batch_id", F.lit(base_id).cast(bid_t))
-    kept = raw.where(F.col("__batch_id") > F.lit(base_id)).select(
-        *data_cols, "__batch_id"
-    )
-    tmp = tempfile.mkdtemp(
-        prefix="flagged_compact_",
-        dir=os.path.dirname(os.path.abspath(flagged_path)),
-    )
-    staged = os.path.join(tmp, "data")
-    (
-        base.unionByName(kept)
-        .repartition(F.col("__batch_id"), F.col("train_id"))
-        .write.mode("overwrite")
-        .partitionBy("__batch_id")
-        .parquet(staged)
-    )
-    publish_dir_swap(staged, flagged_path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return len(fold) - 1
+    bounds the partition/file count the serving union scans."""
+    return _fold_batches(spark, flagged_path, lambda rows: rows, "train_id")
 
 
 def flagged_documents(
@@ -611,8 +591,6 @@ def flagged_documents(
 def dedup_graph_maintenance(
     index_path: str,
     labels_path: str,
-    tombstones_path: str | None = None,
-    op_col: str = "__op",
     compact_every: int | None = None,
 ):
     """foreachBatch sink maintaining the dedup graph EXACTLY as document
@@ -624,9 +602,10 @@ def dedup_graph_maintenance(
 
     Per micro-batch: (a) sign the new docs (narrow — signatures depend
     only on each doc's own text, the property that makes the index
-    append-only), (b) if the batch carries an ``op_col`` column, rows
-    with op ``"delete"`` are tombstones: their components are
-    recomputed over surviving members only (deletion can SPLIT a
+    append-only), (b) if the batch carries an ``__op`` column, rows
+    with op ``"delete"`` are tombstones (stored beside the index at
+    ``index_path + "_tombstones"``): their components are recomputed
+    over surviving members only (deletion can SPLIT a
     component, so labels cannot be patched — but the blast radius is
     bounded at the affected components), (c) probe the accumulated
     index (partition-pruned via ``read_band_index``, bucket-capped at
@@ -638,21 +617,20 @@ def dedup_graph_maintenance(
     their old component id (r11, VERDICT r10 next #3; the r10 shape
     injected star edges per touched member, paying CC rounds and
     shuffle proportional to member count), (e) one min-label CC over
-    that contracted edge set, (f) write the batch's label DELTA — only nodes of touched /
-    affected components, with ``TOMBSTONE_COMPONENT`` rows for nodes
+    that contracted edge set, (f) write the batch's label DELTA — only
+    nodes of touched / affected components, with ``TOMBSTONE_COMPONENT`` rows for nodes
     that lost their label — never a full snapshot. Contract: a doc_id
     must not appear as both an insert and a delete in the SAME batch
     (a delete tombstones the id's index rows going forward, so the
     same-batch insert would be born dead) — split such ops across
     batches, delete first.
 
-    Replay fence (foreachBatch is at-least-once): every store write is
-    idempotent — labels, index, and tombstones all carry ``__batch_id``
-    as a PARTITION column and are written with dynamic partition
-    overwrite, so a replay of batch N overwrites exactly its own
-    partitions instead of double-appending; every store READ inside the
-    batch filters ``__batch_id < N``, so a replay that crashed after a
-    partial write recomputes from exactly the pre-batch state
+    Replay fence (foreachBatch is at-least-once): every store write —
+    labels, index, tombstones — goes through ``_write_fenced``, so a
+    replay of batch N overwrites exactly its own partitions instead of
+    double-appending; every store READ inside the batch filters
+    ``__batch_id < N``, so a replay that crashed after a partial write
+    recomputes from exactly the pre-batch state
     (double-invocation-tested). Contrast ``rollup_maintenance``, whose
     commutative partials can instead dedup on batch id at merge time.
 
@@ -664,6 +642,8 @@ def dedup_graph_maintenance(
     current view scans one narrow row per node-version until
     ``compact_labels`` folds history down.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
     from wikidatabots_spark.functions.scale import pushdown_fence
     from wikidatabots_spark.operators.dedup import (
         band_pairs,
@@ -672,55 +652,26 @@ def dedup_graph_maintenance(
         minhash_band_table,
     )
 
-    tomb_path = tombstones_path or index_path.rstrip("/") + "_tombstones"
-
-    def _write_fenced(
-        df: DataFrame, path: str, *part_cols: str, spread: str | None = None
-    ) -> None:
-        # dynamic partition overwrite = the replay fence: a re-run of
-        # the same batch id replaces its own partitions, byte-for-byte
-        # idempotent; other batches' partitions are never touched. The
-        # store lives behind a symlink pointer from birth so
-        # compact_labels publishes with ONE atomic rename (no window
-        # where the store is absent, VERDICT r10 next #1).
-        #
-        # Repartition on the partition columns before the write (r13):
-        # without it EVERY write task that holds rows for a partition
-        # value emits its own file there — measured 512 files per batch
-        # (32 tasks × 16 band prefixes) for a ~3k-row index delta, and
-        # every later probe/fold pays the per-file listing+open cost; at
-        # cluster scale that is tasks×prefixes files per batch, the
-        # classic small-files failure. ``spread`` adds one high-card
-        # column so a large batch still writes in parallel; no explicit
-        # partition count is given, so AQE sizes the exchange (tiny
-        # delta → one file per touched partition dir, huge delta →
-        # proportional).
-        from wikidatabots_spark.sinks.compaction import ensure_linked_store
-
-        keys = [F.col(c) for c in part_cols]
-        if spread is not None:
-            keys.append(F.col(spread))
-        ensure_linked_store(path)
-        (
-            df.repartition(*keys)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
+    tomb_path = _tomb_path(index_path)
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
+        # one background thread per batch (the merged-labels fence build,
+        # then the band-index append — see below); `with` joins it even
+        # when the batch raises
+        with ThreadPoolExecutor(max_workers=1) as bg:
+            _maintain(batch, int(batch_id), bg)
 
+    def _maintain(
+        batch: DataFrame, batch_id: int, bg: ThreadPoolExecutor
+    ) -> None:
         spark = batch.sparkSession
-        batch_id = int(batch_id)
-        if op_col in batch.columns:
+        if _OP_COL in batch.columns:
             deletes = pushdown_fence(
-                batch.where(F.col(op_col) == F.lit("delete")).select("doc_id")
+                batch.where(F.col(_OP_COL) == F.lit("delete")).select("doc_id")
             )
             inserts = batch.where(
-                F.coalesce(F.col(op_col) != F.lit("delete"), F.lit(True))
-            ).drop(op_col)
+                F.coalesce(F.col(_OP_COL) != F.lit("delete"), F.lit(True))
+            ).drop(_OP_COL)
         else:
             deletes = None
             inserts = batch
@@ -737,24 +688,20 @@ def dedup_graph_maintenance(
         # built (file listing done), so the concurrent append — which
         # this batch's probe excludes anyway via __batch_id < batch_id —
         # can never confuse the probe's listing.
-        _idx_pool = ThreadPoolExecutor(max_workers=1)
-
         def _index_write() -> None:
             _write_fenced(
-                bands_new.withColumn("band_pfx", _band_pfx()).withColumn(
-                    "__batch_id", F.lit(batch_id)
-                ),
+                bands_new.withColumn("band_pfx", _band_pfx()),
                 index_path,
+                batch_id,
+                "band_hash",
                 "band_pfx",
-                "__batch_id",
-                spread="band_hash",
             )
 
         if not have_state:
             delta = connected_components(band_pairs(bands_new)).select(
                 "node", "component"
             )
-            _idx_fut = _idx_pool.submit(_index_write)
+            _idx_fut = bg.submit(_index_write)
         else:
             # Building the merged-labels fence COMPILES a full physical
             # plan on the driver (a lazy localCheckpoint needs toRdd) —
@@ -762,18 +709,17 @@ def dedup_graph_maintenance(
             # (guide §7.3). It depends on nothing this batch computes,
             # so build it on a worker thread overlapped with the
             # signature materialization + prefix collect below (guide
-            # §2.6); joined before first use either branch.
-            _labels_pool = ThreadPoolExecutor(max_workers=1)
-            _labels_fut = _labels_pool.submit(
+            # §2.6); joined before first use either branch, so it is
+            # done before the index append takes the same thread.
+            _labels_fut = bg.submit(
                 lambda: pushdown_fence(
                     _merged_labels(spark, labels_path, before_batch=batch_id)
                 )
             )
-            if op_col in batch.columns and deletes is not None:
-                prior_labels = _labels_fut.result()
             members = None
             recomputed_del = None
             if deletes is not None:
+                prior_labels = _labels_fut.result()
                 dd = deletes.select(F.col("doc_id").alias("node"))
                 affected = (
                     prior_labels.join(dd, "node", "left_semi")
@@ -822,7 +768,6 @@ def dedup_graph_maintenance(
                 # insert-only batch: the merged-labels fence build just
                 # overlapped with the signature job above — join it here
                 post_labels = _labels_fut.result()
-            _labels_pool.shutdown(wait=False)
             prior_idx = read_band_index(
                 spark,
                 index_path,
@@ -834,7 +779,7 @@ def dedup_graph_maintenance(
                 prior_idx = prior_idx.join(deletes, "doc_id", "left_anti")
             # bands_new materialized (pfx collect) and the probe's file
             # listing done — overlap the index append with the CC path
-            _idx_fut = _idx_pool.submit(_index_write)
+            _idx_fut = bg.submit(_index_write)
             bn = bands_new.select(
                 F.col("doc_id").alias("id_n"), "band_idx", "band_hash"
             )
@@ -941,21 +886,10 @@ def dedup_graph_maintenance(
                 )
                 resolved = resolved.unionByName(nulls)
             delta = resolved
-        _write_fenced(
-            delta.withColumn("__batch_id", F.lit(batch_id)),
-            labels_path,
-            "__batch_id",
-            spread="node",
-        )
+        _write_fenced(delta, labels_path, batch_id, "node")
         _idx_fut.result()
-        _idx_pool.shutdown(wait=True)
         if deletes is not None:
-            _write_fenced(
-                deletes.withColumn("__batch_id", F.lit(batch_id)),
-                tomb_path,
-                "__batch_id",
-                spread="doc_id",
-            )
+            _write_fenced(deletes, tomb_path, batch_id, "doc_id")
         # self-bounding retention: every `compact_every` batches, fold
         # the label delta history into one base partition and the
         # band-index + tombstone history into per-prefix base partitions
@@ -966,8 +900,8 @@ def dedup_graph_maintenance(
         # exactly, so a replayed batch reads the same prior state
         # whether or not the fold already happened.
         if compact_every and batch_id % compact_every == compact_every - 1:
-            compact_labels(spark, labels_path, keep_last=1)
-            compact_index(spark, index_path, tomb_path, keep_last=1)
+            compact_labels(spark, labels_path)
+            compact_index(spark, index_path)
 
     return apply
 
@@ -981,75 +915,29 @@ def latest_labels(spark: SparkSession, labels_path: str) -> DataFrame:
     return _merged_labels(spark, labels_path)
 
 
-def compact_labels(
-    spark: SparkSession, labels_path: str, keep_last: int = 1
-) -> int:
-    """Retention compaction for the label delta store: fold every delta
-    partition except the newest ``keep_last`` into ONE base partition
-    (the merge-on-read result materialized at the highest folded batch
-    id). Returns the number of partitions folded away.
+def compact_labels(spark: SparkSession, labels_path: str) -> int:
+    """Retention compaction for the label delta store: ``_fold_batches``
+    with the merge-on-read result (latest row per node) as the base.
+    Returns the number of partitions folded away.
 
     ``latest_labels`` is IDENTICAL before and after (test-pinned): the
     base holds the latest row per node over the folded prefix —
     including tombstone rows, which must survive so a node deleted in
-    the folded range stays dead.
-
-    Atomicity (VERDICT r10 next #1): the compacted store — base
-    partition PLUS the kept delta partitions — is built in a staged
-    sibling directory and published with
-    ``sinks.compaction.publish_dir_swap``, one atomic retarget of the
-    store's symlink pointer (the store is born behind the pointer via
-    ``ensure_linked_store`` in ``_write_fenced``). The r10 protocol
-    instead overwrote the base partition in place and then rmtree'd the
-    superseded partition dirs, so a crash between the two left
-    permanent duplicate node-versions that relied on merge-on-read
-    semantics forever; now a crash at ANY step leaves the previous
-    store byte-identical (crash-at-every-step fault-injection tested)
-    and at worst an unreferenced staged version dir, swept by the next
-    publish. On an object store the pointer is a manifest — the
-    VersionedTable pattern.
+    the folded range stays dead. The compacted store is published with
+    one atomic pointer retarget, so a crash at ANY step leaves the
+    previous store byte-identical (crash-at-every-step fault-injection
+    tested) and at worst an unreferenced staged version dir, swept by
+    the next publish.
     """
-    import shutil
-    import tempfile
 
-    from wikidatabots_spark.sinks.compaction import publish_dir_swap
+    def merge(rows: DataFrame) -> DataFrame:
+        return (
+            rows.groupBy("node")
+            .agg(F.max(F.struct("__batch_id", "component")).alias("s"))
+            .select("node", F.col("s.component").alias("component"))
+        )
 
-    part_ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(labels_path)
-        if d.startswith("__batch_id=")
-    )
-    fold = part_ids[:-keep_last] if keep_last > 0 else part_ids
-    if len(fold) <= 1:
-        return 0
-    base_id = fold[-1]
-    all_labels = spark.read.parquet(resolve_store(labels_path))
-    bid_type = all_labels.schema["__batch_id"].dataType
-    base = (
-        all_labels.where(F.col("__batch_id") <= F.lit(base_id))
-        .groupBy("node")
-        .agg(F.max(F.struct("__batch_id", "component")).alias("s"))
-        .select("node", F.col("s.component").alias("component"))
-        .withColumn("__batch_id", F.lit(base_id).cast(bid_type))
-    )
-    kept = all_labels.where(F.col("__batch_id") > F.lit(base_id)).select(
-        "node", "component", "__batch_id"
-    )
-    tmp = tempfile.mkdtemp(
-        prefix="labels_compact_",
-        dir=os.path.dirname(os.path.abspath(labels_path)),
-    )
-    staged = os.path.join(tmp, "data")
-    (
-        base.unionByName(kept)
-        .repartition(F.col("__batch_id"), F.col("node"))
-        .write.mode("overwrite")
-        .partitionBy("__batch_id")
-        .parquet(staged)
-    )
-    publish_dir_swap(staged, labels_path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return len(fold) - 1
+    return _fold_batches(spark, labels_path, merge, "node")
 
 
 def run_staged_foreach_batch(
@@ -1143,24 +1031,7 @@ def run_staged_foreach_batch(
         raise q.exception()
 
 
-def _store_batch_ids(path: str) -> list[int]:
-    """Distinct ``__batch_id`` partition values anywhere in a (possibly
-    nested-partitioned) store — the band index nests them under
-    ``band_pfx=…`` directories, so a flat listdir is not enough."""
-    ids: set[int] = set()
-    for _root, dirs, _files in os.walk(path):
-        for d in dirs:
-            if d.startswith("__batch_id="):
-                ids.add(int(d.split("=", 1)[1]))
-    return sorted(ids)
-
-
-def compact_index(
-    spark: SparkSession,
-    index_path: str,
-    tombstones_path: str | None = None,
-    keep_last: int = 1,
-) -> int:
+def compact_index(spark: SparkSession, index_path: str) -> int:
     """Retention compaction for the band-index AND tombstone stores —
     the last history-linear cost in the streaming dedup graph (VERDICT
     r11 next #1; ``compact_labels`` already bounds the label store).
@@ -1172,12 +1043,12 @@ def compact_index(
     :func:`read_band_index`:
 
     1. Index partitions with ``__batch_id <= base_id`` (every id except
-       the newest ``keep_last``) are MATERIALIZED through the ordered
-       tombstone anti-join — an index row at batch ``i`` is dropped iff
-       a tombstone at batch ``t <= base_id`` with ``t > i`` names its
-       doc — then re-stamped ``__batch_id = base_id`` and rewritten as
-       one base partition per ``band_pfx`` (probe pruning still works:
-       the prefix stays the partition key).
+       the newest) are MATERIALIZED through the ordered tombstone
+       anti-join — an index row at batch ``i`` is dropped iff a
+       tombstone at batch ``t <= base_id`` with ``t > i`` names its doc
+       — then re-stamped ``__batch_id = base_id`` and rewritten as one
+       base partition per ``band_pfx`` (probe pruning still works: the
+       prefix stays the partition key).
     2. Tombstones with ``__batch_id <= base_id`` are DROPPED: their
        suppression was just materialized, and they can never suppress a
        surviving row (every survivor now carries ``base_id >= t``, and
@@ -1199,12 +1070,12 @@ def compact_index(
     - Probe-time bucket caps are unchanged: ``cap_band_buckets`` ranks
       by doc_id only, never by batch id.
 
-    The newest ``keep_last`` partitions stay un-folded for the replay
-    fence: a replayed micro-batch's dynamic partition overwrite targets
-    its own ``(band_pfx, __batch_id)`` partitions, which must not be
-    the base. Both rewrites publish via ``publish_dir_swap`` (atomic
-    pointer retarget, crash-at-every-step tested); the two publishes
-    commute for the served view — a crash between them leaves
+    The newest partition stays un-folded for the replay fence: a
+    replayed micro-batch's dynamic partition overwrite targets its own
+    ``(band_pfx, __batch_id)`` partitions, which must not be the base.
+    Both rewrites publish via ``rewrite_store`` (atomic pointer
+    retarget, crash-at-every-step tested); the two publishes commute
+    for the served view — a crash between them leaves
     already-materialized base rows plus not-yet-dropped old tombstones,
     which cannot double-suppress (``t <= base_id`` never exceeds the
     base rows' batch id). Returns the number of index partitions folded
@@ -1216,24 +1087,18 @@ def compact_index(
     whose partition count crossed a threshold), the
     ``compact_parquet_dir`` discipline.
     """
-    import shutil
-    import tempfile
-
-    from wikidatabots_spark.sinks.compaction import publish_dir_swap
-
-    tomb_path = tombstones_path or index_path.rstrip("/") + "_tombstones"
+    tomb_path = _tomb_path(index_path)
     part_ids = _store_batch_ids(index_path)
-    fold = part_ids[:-keep_last] if keep_last > 0 else part_ids
-    if not fold:
+    if len(part_ids) <= 1:
         return 0
-    base_id = fold[-1]
+    base_id = part_ids[-2]
     have_tombs = _has_parquet(tomb_path)
     tomb_fold = (
         [t for t in _store_batch_ids(tomb_path) if t <= base_id]
         if have_tombs
         else []
     )
-    if len(fold) <= 1 and not tomb_fold:
+    if len(part_ids) <= 2 and not tomb_fold:
         return 0
 
     idx = spark.read.parquet(resolve_store(index_path))
@@ -1259,42 +1124,23 @@ def compact_index(
         "doc_id", "band_idx", "band_hash", "band_pfx"
     ).withColumn("__batch_id", F.lit(base_id).cast(bid_t))
 
-    tmp = tempfile.mkdtemp(
-        prefix="index_compact_",
-        dir=os.path.dirname(os.path.abspath(index_path)),
-    )
-    staged = os.path.join(tmp, "data")
-    (
-        # repartition on the partition cols (+ band_hash for spread,
-        # AQE-sized) so the fold writes one file per partition dir, not
-        # one per task per dir (r13 small-files fix)
-        base.unionByName(kept)
-        .repartition(
+    # repartition on the partition cols (+ band_hash for spread,
+    # AQE-sized) so the fold writes one file per partition dir — the
+    # `_write_fenced` layout
+    rewrite_store(
+        base.unionByName(kept).repartition(
             F.col("band_pfx"), F.col("__batch_id"), F.col("band_hash")
-        )
-        .write.mode("overwrite")
-        .partitionBy("band_pfx", "__batch_id")
-        .parquet(staged)
+        ),
+        index_path,
+        ("band_pfx", "__batch_id"),
     )
-    publish_dir_swap(staged, index_path)
-    shutil.rmtree(tmp, ignore_errors=True)
-
     if tomb_fold:
-        tbid_t = tomb.schema["__batch_id"].dataType
         tkept = tomb.where(F.col("__batch_id") > F.lit(base_id)).select(
-            "doc_id", F.col("__batch_id").cast(tbid_t).alias("__batch_id")
+            "doc_id", "__batch_id"
         )
-        ttmp = tempfile.mkdtemp(
-            prefix="tomb_compact_",
-            dir=os.path.dirname(os.path.abspath(tomb_path)),
+        rewrite_store(
+            tkept.repartition(F.col("__batch_id"), F.col("doc_id")),
+            tomb_path,
+            ("__batch_id",),
         )
-        tstaged = os.path.join(ttmp, "data")
-        (
-            tkept.repartition(F.col("__batch_id"), F.col("doc_id"))
-            .write.mode("overwrite")
-            .partitionBy("__batch_id")
-            .parquet(tstaged)
-        )
-        publish_dir_swap(tstaged, tomb_path)
-        shutil.rmtree(ttmp, ignore_errors=True)
-    return len(fold) - 1
+    return len(part_ids) - 2

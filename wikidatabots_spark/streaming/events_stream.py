@@ -336,29 +336,12 @@ def compact_rollup_state(
     defining monoid, so pre-merging slices cannot change the served
     view; it only bounds the row count at keys (not keys × batches).
 
-    Both rewrites publish via ``sinks.compaction.publish_dir_swap``:
-    the store path is a symlink pointer retargeted by ONE atomic
-    rename, so readers see the old complete store or the new complete
-    store at every instant — no window where the path is absent, no
-    ``.old`` leftovers to wedge the next compaction (ADVICE r10 low;
-    the old two-rename protocol had both). Returns the compacted
-    partials row count.
+    Both rewrites publish via ``sinks.compaction.rewrite_store`` (one
+    atomic retarget of the store's symlink pointer: readers see the old
+    complete store or the new one at every instant). Returns the
+    compacted partials row count.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from wikidatabots_spark.sinks.compaction import publish_dir_swap
-
-    def _swap_rewrite(df: DataFrame, path: str) -> None:
-        tmp = tempfile.mkdtemp(
-            prefix="rollup_compact_",
-            dir=os.path.dirname(os.path.abspath(path)),
-        )
-        staged = os.path.join(tmp, "staged")
-        df.write.mode("overwrite").parquet(staged)
-        publish_dir_swap(staged, path)
-        shutil.rmtree(tmp, ignore_errors=True)
+    from wikidatabots_spark.sinks.compaction import rewrite_store
 
     raw = spark.read.parquet(resolve_store(partials_path))
     top = raw.agg(F.max("__batch_id").alias("m")).first().m
@@ -383,8 +366,8 @@ def compact_rollup_state(
             F.lit(top).cast(raw.schema["__batch_id"].dataType),
         )
     )
-    _swap_rewrite(folded, partials_path)
-    _swap_rewrite(
+    rewrite_store(folded, partials_path)
+    rewrite_store(
         spark.read.parquet(resolve_store(user_keys_path)).distinct(), user_keys_path
     )
     return spark.read.parquet(partials_path).count()
